@@ -37,9 +37,10 @@ final case class PipelineConfig(
   *     |> mergeDuplicates |> classifyAgainst(existing)
   *
   * Every dimension join is an explicit `broadcast` (the reference's five
-  * synchronized HashMap caches, DAO.java:40-145); the only wide shuffles
-  * in the whole plan are the two merge aggregations and the final
-  * classify join.
+  * synchronized HashMap caches, DAO.java:40-145). The GAF is scanned once
+  * and its rows shuffle once before the classify join: [[annotate]]
+  * hash-partitions the enriched rows on the prefix both merge keys share,
+  * so the A4 and A2 aggregations run on that one exchange.
   */
 object AnnotationPipeline {
 
@@ -249,7 +250,11 @@ object AnnotationPipeline {
     * (input line, matched active gene): the reference's fan-out loop over
     * `genes` becomes a one-to-many broadcast join; the per-source
     * fallback chain (J2/J3) becomes priority candidates + keep-min-rank.
-    * Output adds `_row_id`, `rgd_id`.
+    * RGD lines (J5) skip the xdb tiers and probe the resolve dim directly.
+    * Every line passes through ONE chain of broadcast left probes — the
+    * three tiers plus the RGD probe — so the input is read once, with no
+    * per-db branches and no union.
+    * Output adds `_row_id`, `_row_id2`, `_prio`, `rgd_id`.
     *
     * Status + history + species resolution (J6/F6) is applied INSIDE the
     * broadcast dim (`resolveGeneIds`), so candidate sets already hold
@@ -290,7 +295,8 @@ object AnnotationPipeline {
     // broadcast left-joins against a set-valued dim (one array of
     // RESOLVED gene ids per (xdb_key, acc)), resolved by priority
     // coalesce + explode. Fully map-side: the one-to-many fan-out AND
-    // the best-tier choice happen without shuffling the fact.
+    // the best-tier choice happen without shuffling the fact. An RGD
+    // line's tier keys are all -1, so its tier probes find nothing.
     // `resolveOverride` swaps the (raw -> active file-species) dim for an
     // audit variant (identity: raw matches; any-species: unmatched-line
     // parity with MAHQC.java:81-84) — the plan shape is identical.
@@ -350,28 +356,28 @@ object AnnotationPipeline {
         key === col(s"_k$out") && acc === col(s"_a$out"), "left")
         .drop(s"_k$out", s"_a$out")
 
-    val best = tier(tier(tier(g.filter(col("db") =!= "RGD"),
-        "_t1", t1Key, t1Acc), "_t2", t2Key, id), "_t3", t3Key, altId)
-      .withColumn("_prio",
-        when(col("_t1").isNotNull, 1)
-          .when(col("_t2").isNotNull, 2)
-          .when(col("_t3").isNotNull, 3))
-      .filter(col("_prio").isNotNull)
-      .withColumn("rgd_id",
-        explode(coalesce(col("_t1"), col("_t2"), col("_t3"))))
-      .drop("_t1", "_t2", "_t3")
+    // J5: chinchilla identity — col 2 IS the rgd id, no xdb lookup; J6
+    // status/history/species resolution applies via the same resolve dim.
+    // One more broadcast left probe in the same pass, keyed only on RGD
+    // lines (null key elsewhere, so it never matches a tiered line). An
+    // id with no digits extracts "": try_cast nulls it (a plain cast
+    // raises under ANSI mode), so the line matches nothing.
+    val isRgd = col("db") === "RGD"
+    val rgdKey = when(isRgd, regexp_extract(id, "(\\d+)", 1).try_cast("int"))
+    val probed = tier(tier(tier(g, "_t1", t1Key, t1Acc), "_t2", t2Key, id),
+        "_t3", t3Key, altId)
+      .join(broadcast(resolve.select(col("raw_rgd_id").as("_k0"),
+          col("final_rgd_id").as("_t0"))),
+        rgdKey === col("_k0"), "left")
 
-    // J5: chinchilla identity — col 2 IS the rgd id, no join; J6 status/
-    // history/species resolution applies via the same resolve dim (one
-    // output row per input row, so no dedup is needed on this branch)
-    val rgdDirect = g.filter(col("db") === "RGD")
-      .withColumn("_raw_id",
-        regexp_extract(col("db_object_id"), "(\\d+)", 1).cast("int"))
-      .filter(col("_raw_id").isNotNull)
-      .join(broadcast(resolve), col("_raw_id") === col("raw_rgd_id"))
-      .drop("_raw_id", "raw_rgd_id")
-      .withColumnRenamed("final_rgd_id", "rgd_id")
-      .withColumn("_prio", lit(1))
+    // RGD lines take only the direct probe (one row per resolve match);
+    // every other db only the tiers. A null db takes neither.
+    val prio = when(isRgd, when(col("_k0").isNotNull, 1))
+      .when(col("db") =!= "RGD", when(col("_t1").isNotNull, 1)
+        .when(col("_t2").isNotNull, 2)
+        .when(col("_t3").isNotNull, 3))
+    val genes = when(isRgd, array(col("_t0")))
+      .otherwise(coalesce(col("_t1"), col("_t2"), col("_t3")))
 
     // F6 + J4: every gene must match the FILE's species (MAHQC.java:87-92)
     // — enforced inside `resolve` — AND RNAcentral rows are additionally
@@ -384,8 +390,11 @@ object AnnotationPipeline {
     val suffixSpecies = try_element_at(
       typedLit(taxonToSpecies.map { case (k, v) => (k.toString, v) }),
       substring_index(col("db_object_id"), "_", -1))
-    best.unionByName(rgdDirect)
-      .filter(col("db") =!= "RNAcentral" || suffixSpecies === lit(fileSpecies))
+    probed
+      .filter(prio.isNotNull &&
+        (col("db") =!= "RNAcentral" || suffixSpecies === lit(fileSpecies)))
+      .select(g.columns.map(col) ++
+        Seq(prio.as("_prio"), explode(genes).as("rgd_id")): _*)
   }
 
   // ------------------------------------------------------------ J7/F10/F11
@@ -545,7 +554,20 @@ object AnnotationPipeline {
     "term_acc", "annotated_object_rgd_id", "ref_rgd_id", "evidence",
     "qualifier", "with_info")
 
-  /** Full per-species plan: GAF rows in, merge-ready annotations out. */
+  /** The columns the A4 and A2 keys share (term_acc,
+    * annotated_object_rgd_id, ref_rgd_id, evidence, qualifier): hash
+    * partitioning on them satisfies both aggregations' distributions.
+    */
+  private val mergeKeyPrefix: Seq[String] = mergeKey.filter(consolidationKey.contains)
+
+  /** Full per-species plan: GAF rows in, merge-ready annotations out.
+    *
+    * The enriched rows are hash-partitioned ONCE on [[mergeKeyPrefix]];
+    * A4's group key and A2's both contain it, and A4 passes its key
+    * columns through, so neither aggregation adds an exchange. That is the
+    * plan's only shuffle of fact rows. Rows cross it full-width, before
+    * A4 reduces them.
+    */
   def annotate(gaf: DataFrame, dims: Dimensions, cfg: PipelineConfig): DataFrame = {
     // plan-build-time partition sizing: the 1000x probe OOM'd the merge
     // aggregations at 32 fixed partitions; an input-adaptive AQE initial
@@ -556,7 +578,8 @@ object AnnotationPipeline {
     val matched = matchGenes(filtered, dims, cfg.speciesTypeKey)
     val enriched = qcAndEnrich(buildAnnotations(matched, dims, cfg), dims, cfg)
     val consolidated = Consolidator.consolidate(
-      enriched.drop("_row_id", "_row_id2", "_prio"),
+      enriched.drop("_row_id", "_row_id2", "_prio")
+        .repartition(mergeKeyPrefix.map(col): _*),
       consolidationKey, "with_info", WITH_INFO_CAP)
     AnnotMerge.merge(consolidated, mergeKey, "xref_source", "notes",
       XREF_SOURCE_CAP)

@@ -382,19 +382,9 @@ object Audit {
     val enrichedN = enrichedSnap.rows
 
     val obsCons = new Observation("consolidated")
-    // stage = false: the input is the MATERIALIZED enriched snapshot, so
-    // the consolidate branches re-read stored rows instead of a staging
-    // exchange that would shuffle every row full-width before any
-    // reduction (the flagship keeps the staged form — its upstream is
-    // the whole uncached join cascade). NOTE: with the staging exchange
-    // gone there is no single reused subtree below the two consolidate
-    // branches, so NO CollectMetrics may sit on the consolidate input
-    // (it would evaluate once per branch and double-count) — enrichedN
-    // comes from the snapshot fill's own count instead.
     val consolidated = graft.operators.Consolidator.consolidate(
         enriched.drop("_row_id", "_row_id2", "_prio"),
-        consolidationKey, "with_info", Constants.WITH_INFO_CAP,
-        stage = false)
+        consolidationKey, "with_info", Constants.WITH_INFO_CAP)
       .observe(obsCons, count(lit(1)).as("n"))
     // emitIdx: a row with _frag_idx >= 1 IS an overflow emission (every
     // fragment past a group's first), so the A2 truncation counter rides

@@ -13,14 +13,18 @@ import graft.functions.TokenOps
   * bookkeeping (WithInfoConsolidator.java:96-139) disappears.
   *
   * Rows with an empty/null token column never merge (the reference tags
-  * them `" EMPTY"` — WithInfoConsolidator.java:23-36); they pass through
-  * a union, not a special group.
+  * them `" EMPTY"` — WithInfoConsolidator.java:23-36). They ride the SAME
+  * aggregation as a collected list of whole rows and are re-exploded one
+  * output row each, so duplicate empties stay distinct.
   *
-  * Plan shape: one hash-aggregate shuffle on the key; the token-set
-  * union runs as built-in `collect_list`/`flatten`/`array_distinct`/
-  * `array_sort` expressions with map-side partial aggregation; only the
-  * final fragmenting is a Scala UDF (small input: one sorted token array
-  * per group).
+  * Plan shape: ONE hash aggregation on the key, consuming its input once
+  * (no filter branches and no union, so the upstream plan is never
+  * duplicated); the token-set union runs as built-in `collect_list`/
+  * `flatten`/`array_distinct`/`array_sort` expressions with map-side
+  * partial aggregation; only the final fragmenting is a Scala UDF (small
+  * input: one sorted token array per group). The key columns pass
+  * through as grouping attributes, so an input already hash-partitioned
+  * on a subset of the key keeps that partitioning to the output.
   */
 object Consolidator {
 
@@ -41,48 +45,36 @@ object Consolidator {
     *                 evidence, qualifier, xref_source, data_src, notes)
     * @param tokenCol the `[|,]`-delimited column to consolidate
     * @param cap      serialized-length cap (1700 for WITH_INFO)
-    * @param stage    stage the input through one explicit hash exchange
-    *                 (default). Pass false ONLY when `df` is a filled
-    *                 persisted cache: there the branch re-reads are cheap
-    *                 cache scans, the staging exchange would shuffle every
-    *                 row FULL-WIDTH before any reduction, and skipping it
-    *                 lets the mergeable branch's partial aggregation
-    *                 collapse rows map-side before its own exchange (the
-    *                 counter dump's measured shape).
-    *
-    * Single-pass (stage = true): the input is staged through ONE explicit
-    * hash exchange on the key, which both the mergeable branch (whose
-    * groupBy then needs no further shuffle — the partitioning already
-    * satisfies the clustered distribution) and the empties branch
-    * consume. Without the staging exchange each branch re-executes the
-    * whole upstream plan (for the e2e pipeline that upstream is the full
-    * broadcast-join cascade from the scan — a 2x scan at any scale). The
-    * cap split is a single conditional projection, not a second pair of
-    * branches, so the aggregate output is consumed exactly once.
     */
   def consolidate(df: DataFrame, keyCols: Seq[String], tokenCol: String,
-                  cap: Int, stage: Boolean = true): DataFrame = {
-    val passCols = df.columns.filterNot(c => keyCols.contains(c) || c == tokenCol)
-    val staged = if (stage) df.repartition(keyCols.map(col): _*) else df
-    val mergeable = staged.filter(length(coalesce(col(tokenCol), lit(""))) > 0)
-    val empties = staged.filter(length(coalesce(col(tokenCol), lit(""))) === 0)
+                  cap: Int): DataFrame = {
+    val rowCols = df.columns.filterNot(keyCols.contains)
+    val passCols = rowCols.filterNot(_ == tokenCol)
+    val nonEmpty = length(coalesce(col(tokenCol), lit(""))) > 0
 
-    val aggs = array_join(tokenSetAgg(col(tokenCol)), "|").as("_tok") +:
-      passCols.map(c => max(col(c)).as(c))
-    val merged = mergeable
-      .groupBy(keyCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
+    // empty-token rows add no tokens to the set, so it is taken over every
+    // row; the merged row's pass columns are maxed over mergeable rows only
+    val aggs = Seq(
+        array_join(tokenSetAgg(col(tokenCol)), "|").as("_tok"),
+        bool_or(nonEmpty).as("_merges"),
+        collect_list(when(!nonEmpty, struct(rowCols.map(col): _*)))
+          .as("_empties")) ++
+      passCols.map(c => max(when(nonEmpty, col(c))).as(c))
+    val grouped = df.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
 
     // common case (merged set fits the cap): the joined sorted set IS the
     // single fragment — explode of a 1-element array, entirely inside
     // codegen'd builtins. The fragmenting UDF runs only on the rare
     // oversized groups (CaseWhen evaluates branches conditionally).
-    val out = merged.withColumn(tokenCol,
-        explode(when(length(col("_tok")) <= cap, array(col("_tok")))
-          .otherwise(fragmentUdf(split(col("_tok"), "\\|"), lit(cap)))))
-      .drop("_tok")
+    val fragments = when(length(col("_tok")) <= cap, array(col("_tok")))
+      .otherwise(fragmentUdf(split(col("_tok"), "\\|"), lit(cap)))
+    val merged = transform(fragments, f =>
+      struct(rowCols.map(c => if (c == tokenCol) f.as(c) else col(c)): _*))
+    val rows = when(col("_merges"), concat(merged, col("_empties")))
+      .otherwise(col("_empties"))
 
-    out.select(df.columns.map(col): _*)
-      .unionByName(empties.select(df.columns.map(col): _*))
+    grouped.select(keyCols.map(col) :+ explode(rows).as("_r"): _*)
+      .select(df.columns.map(c =>
+        if (keyCols.contains(c)) col(c) else col("_r").getField(c).as(c)): _*)
   }
 }

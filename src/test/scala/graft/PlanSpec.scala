@@ -138,22 +138,54 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("xxhash64"), "audit line id not pruned from e2e")
     // both merge aggregations stay on the (object-)hash path in the plan
     assert(!p.contains("SortAggregate"), "merge agg fell back to sort")
-    // single-pass buildAnnotations (r7): the fact source appears as
-    // exactly TWO logical leaves — one per Consolidator branch
-    // (mergeable/empties both consume the staging exchange, which
-    // physical planning dedups via ReusedExchange; logically each branch
-    // carries the lineage). The former direct ∪ iso union doubled the
-    // upstream chain per branch (4 leaves). Counted on optimizedPlan
-    // LEAVES (not plan-string occurrences, which vary with cache state
-    // across suites); lineitem-only column marks the fact leaf.
+    // the fact source appears as exactly ONE logical leaf: no branch
+    // anywhere on the spine (match cascade, ISO build, consolidation)
+    // re-reads it. Counted on optimizedPlan LEAVES (not plan-string
+    // occurrences, which vary with cache state across suites);
+    // lineitem-only column marks the fact leaf.
     val factLeaves = graft.queries.GafE2eQueries.annotateE2e(spark, sf)
       .queryExecution.optimizedPlan.collectLeaves()
       .count(_.output.exists(_.name == "l_orderkey"))
-    assert(factLeaves <= 2,
-      s"fact source is $factLeaves leaves — union double-scan is back")
-    assert(factLeaves >= 1, "fact scan missing from e2e plan")
+    assert(factLeaves === 1,
+      s"fact source is $factLeaves leaves — a branch re-reads the scan")
     assert(p.contains("Generate explode"),
       "variant explode missing — buildAnnotations shape changed:\n" + p)
+  }
+
+  test("annotate reads the GAF once and shuffles its rows once") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // the mouse fixture read from a file of its own, as the pipeline reads
+    // a GAF: a text scan, and a plan no other suite has cached
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_gaf")
+    val path = dir.resolve("mouse.gaf")
+    java.nio.file.Files.write(path, Fixtures.mouseGafLines.mkString("\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try {
+      val df = AnnotationPipeline.annotate(
+        graft.sources.GafReader.read(spark, path.toString), Fixtures.dims(spark),
+        Fixtures.mouseConfig(java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
+      // the text scan's `value` column marks the GAF leaf (dims have none)
+      def isGaf(leaf: org.apache.spark.sql.catalyst.plans.QueryPlan[_]): Boolean =
+        leaf.children.isEmpty && leaf.output.exists(_.name == "value")
+      val gafLeaves = df.queryExecution.optimizedPlan.collectLeaves().count(isGaf)
+      assert(gafLeaves === 1, s"GAF source is $gafLeaves leaves")
+      // fact-row exchanges in the final adaptive plan: shuffles with the GAF
+      // leaf below them (dim aggregations feeding broadcasts shuffle dim
+      // rows only). The helper walks into materialized query stages.
+      df.collect()
+      val aqe = new AdaptiveSparkPlanHelper {}
+      val physical = df.queryExecution.executedPlan
+      val factExchanges = aqe.collect(physical) {
+        case e: ShuffleExchangeExec if aqe.find(e)(p => isGaf(p)).isDefined => e
+      }
+      assert(factExchanges.size === 1, physical.toString)
+      val keys = factExchanges.head.outputPartitioning
+        .asInstanceOf[org.apache.spark.sql.catalyst.plans.physical.HashPartitioning]
+        .expressions.map(_.references.head.name)
+      assert(keys === Seq("term_acc", "annotated_object_rgd_id", "ref_rgd_id",
+        "evidence", "qualifier"))
+    } finally graft.Tables.deleteTree(dir)
   }
 
   test("curate composition: fixed shuffle budget, dedup subtree reused") {

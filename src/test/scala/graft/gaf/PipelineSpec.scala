@@ -142,6 +142,44 @@ class PipelineSpec extends SparkSpec {
     assert(kept2.count() === rerun.count() - mouseCount)
   }
 
+  test("matchGenes: RGD and UniProtKB lines in one frame") {
+    import spark.implicits._
+    // 1009 is a retired human id redirecting to 1005; 1001 is mouse, so
+    // it resolves to nothing in a human run
+    val d = dims.copy(
+      rgdIds = dims.rgdIds.unionByName(spark.createDataFrame(
+        java.util.List.of(org.apache.spark.sql.Row(1009, 1, "RETIRED", Constants.HUMAN)),
+        Dims.rgdIds)),
+      history = dims.history.unionByName(spark.createDataFrame(
+        java.util.List.of(org.apache.spark.sql.Row(1009, 1005)), Dims.rgdIdHistory)))
+    val lines = Seq[(String, String, String)](
+      ("RGD", "RGD:1005", ""),          // resolvable
+      ("RGD", "1005", ""),              // bare id
+      ("RGD", "RGD:1009", ""),          // history-redirected
+      ("RGD", "RGD:1001", ""),          // wrong species: unresolvable
+      ("RGD", "RGD:8888", ""),          // unknown id
+      ("RGD", "RGD:abc", ""),           // non-numeric
+      ("UniProtKB", "P12345", ""),      // J1
+      ("UniProtKB", "Q99999", ""),      // J2 (secondary accession)
+      ("UniProtKB", "X00000", "UniProtKB:P12345"), // J3 (gpfi retry)
+      ("UniProtKB", "X00001", ""),      // unmatched
+      ("UniProtKB", "RGD:1005", ""),    // RGD-looking id, non-RGD db
+      (null, "RGD:1005", ""))           // no db: matches nothing
+      .toDF("db", "db_object_id", "gene_product_form_id")
+    val out = AnnotationPipeline.matchGenes(lines, d, Constants.HUMAN)
+    assert(out.columns.toSeq === lines.columns.toSeq ++
+      Seq("_row_id", "_row_id2", "_prio", "rgd_id"))
+    val rows = out.select($"db", $"db_object_id", $"_prio", $"rgd_id")
+      .as[(String, String, Int, Int)].collect().sorted
+    assert(rows === Array(
+      ("RGD", "1005", 1, 1005),
+      ("RGD", "RGD:1005", 1, 1005),
+      ("RGD", "RGD:1009", 1, 1005),
+      ("UniProtKB", "P12345", 1, 1005),
+      ("UniProtKB", "Q99999", 2, 1005),
+      ("UniProtKB", "X00000", 3, 1005)))
+  }
+
   test("matchGenes fails loudly when the xdb dim exceeds the broadcast cap") {
     val key = "graft.match.maxXdbBroadcastRows"
     spark.conf.set(key, "1") // fixture xdb has >1 row

@@ -46,6 +46,27 @@ class ConsolidatorSpec extends SparkSpec {
     assert(out.count() === 3) // two empties pass through + one merged
   }
 
+  test("A4: duplicate empties beside a merged row all survive, values intact") {
+    // the empties ride the merge aggregation as whole rows: they must not
+    // collapse onto each other, and their pass values must not leak into
+    // (or take from) the merged row's
+    val df = Seq(("k", "a", "x"), ("k", "", "z"), ("k", "", "z"))
+      .toDF("key", "with_info", "other")
+    val out = Consolidator.consolidate(df, Seq("key"), "with_info", 1700)
+    val rows = out.collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(rows.sorted === Array(("k", "", "z"), ("k", "", "z"), ("k", "a", "x")))
+  }
+
+  test("A4: an all-empty group passes every row through unchanged") {
+    val df = Seq[(String, String, String)](("e", null, "p"), ("e", "", "q"), ("e", null, "p"))
+      .toDF("key", "with_info", "other")
+    val out = Consolidator.consolidate(df, Seq("key"), "with_info", 1700)
+    assert(out.columns === df.columns)
+    val rows = out.collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(rows.sortBy(r => (Option(r._2), r._3)) ===
+      Array(("e", null, "p"), ("e", null, "p"), ("e", "", "q")))
+  }
+
   test("A2: overflow emits multiple annotations per group") {
     val df = Seq(
       ("k", "PMID:1", null.asInstanceOf[String]),
