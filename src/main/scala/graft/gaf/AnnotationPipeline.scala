@@ -585,15 +585,13 @@ object AnnotationPipeline {
       XREF_SOURCE_CAP)
   }
 
-  /** The merge-ready INCOMING side of [[run]]: annotate plus the
-    * identity/audit columns the classify-merge fills, projected to the
-    * target table's column order. Independent of the EXISTING table by
-    * construction — every enrichment and filter reads `dims`, never the
-    * evolving annotation table — which is what lets
-    * [[PipelineRunner.runAll]] materialize every species' incoming side
-    * CONCURRENTLY before the (necessarily sequential) merges.
+  /** The merge-ready INCOMING side of [[run]]: an [[annotate]] frame plus
+    * the identity/audit columns the classify-merge fills, projected to the
+    * target table's column order. [[run]] and the A7 counter dump
+    * (`Audit.pipelineCounters`) share it, so both hand the merge the same
+    * projection.
     */
-  def incoming(gaf: DataFrame, dims: Dimensions, cfg: PipelineConfig,
+  def incoming(annotated: DataFrame, cfg: PipelineConfig,
                cols: Seq[String]): DataFrame = {
     // ONE select, not five withColumns + a select (r17): every
     // withColumn above the full annotate tree re-runs Catalyst analysis
@@ -604,7 +602,7 @@ object AnnotationPipeline {
       "last_modified_date" -> lit(null).cast("timestamp"),
       "created_by" -> lit(cfg.createdBy),
       "last_modified_by" -> lit(cfg.createdBy))
-    annotate(gaf, dims, cfg)
+    annotated
       .select(cols.map(c => identity.getOrElse(c, col(c)).as(c)): _*)
   }
 
@@ -622,6 +620,6 @@ object AnnotationPipeline {
   private[graft] def run(gaf: DataFrame, existing: DataFrame, dims: Dimensions,
           cfg: PipelineConfig, maxKeyOpt: Option[Long]): DataFrame =
     MergeSink.merge(existing,
-      incoming(gaf, dims, cfg, existing.columns.toSeq),
+      incoming(annotate(gaf, dims, cfg), cfg, existing.columns.toSeq),
       cfg.runTs, cfg.createdBy, assignKeys = true, maxKeyOpt = maxKeyOpt)
 }

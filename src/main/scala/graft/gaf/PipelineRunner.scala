@@ -24,13 +24,6 @@ import graft.plans.Snapshot
   */
 object PipelineRunner {
 
-  /** Phase timing for scale probes (set GRAFT_RUNNER_TIMING=1); zero-cost
-    * in normal runs.
-    */
-  private val timing = sys.env.contains("GRAFT_RUNNER_TIMING")
-  private def timed[T](name: String)(f: => T): T =
-    graft.util.Debug.timed(timing, "RUNNER", name)(f)
-
   final case class SpeciesRun(name: String, gaf: DataFrame, cfg: PipelineConfig)
 
   /** @param finalTable the post-U5 table: a NARROW plan (column
@@ -69,22 +62,10 @@ object PipelineRunner {
     * @param staleCutoff rows last modified before this are delete
     *                    candidates (run start − 10 min in the reference,
     *                    GoNonratAnnotationPipeline.java:98)
-    * @param concurrentIncoming materialize every species' incoming spine
-    *                    concurrently before the sequential merges.
-    *                    Default OFF — measured SLOWER on a shared-heap
-    *                    local deployment (see the phase comment below);
-    *                    intended for multi-executor clusters only.
-    *                    UNPROVEN-BENEFICIAL ANYWHERE as of r16: no
-    *                    environment has yet shown it winning (local[32]
-    *                    is ~2x slower; output parity is spec-pinned).
-    *                    MEASURE ON A REAL MULTI-EXECUTOR CLUSTER before
-    *                    enabling in a deployment — if your measurement
-    *                    also shows no win, leave it off.
     */
   def runAll(existing: DataFrame, dims: Dimensions, runs: Seq[SpeciesRun],
              isoRefRgdId: Int, staleCutoff: Timestamp,
-             thresholdPct: Double = DELETE_THRESHOLD_PCT,
-             concurrentIncoming: Boolean = false): RunReport = {
+             thresholdPct: Double = DELETE_THRESHOLD_PCT): RunReport = {
     // ---- fused scoped-count machinery (r16 optimization round).
     //
     // The loop below used to pay, PER SPECIES, six driver actions over
@@ -123,25 +104,24 @@ object PipelineRunner {
     // U5 snapshot BEFORE any species runs — fused with the first
     // species' initial count and the first merge's max-key aggregation
     // (was three sequential driver actions over `existing`; one pass)
-    val (isoInitial, firstInitial, firstMaxKey) =
-      timed("initial_counts_fused") {
-        val withIso = existing.join(
-          broadcast(scopeFrame(RAT, "_m_iso")),
-          col("annotated_object_rgd_id") === col("_m_iso"), "left")
-        val withFirst = runs.headOption match {
-          case Some(r0) => withIso.join(
-            broadcast(scopeFrame(r0.cfg.speciesTypeKey, "_m_f0")),
-            col("annotated_object_rgd_id") === col("_m_f0"), "left")
-          case None => withIso.withColumn("_m_f0", lit(null).cast("int"))
-        }
-        val row = withFirst.agg(
-          count(when(scoped("_m_iso", isoRefRgdId), 1)).as("iso"),
-          count(when(runs.headOption
-            .map(r0 => scoped("_m_f0", r0.cfg.refRgdId))
-            .getOrElse(lit(false)), 1)).as("f0"),
-          coalesce(max(col("full_annot_key")), lit(0L)).as("mk")).head()
-        (row.getLong(0), row.getLong(1), row.getLong(2))
+    val (isoInitial, firstInitial, firstMaxKey) = {
+      val withIso = existing.join(
+        broadcast(scopeFrame(RAT, "_m_iso")),
+        col("annotated_object_rgd_id") === col("_m_iso"), "left")
+      val withFirst = runs.headOption match {
+        case Some(r0) => withIso.join(
+          broadcast(scopeFrame(r0.cfg.speciesTypeKey, "_m_f0")),
+          col("annotated_object_rgd_id") === col("_m_f0"), "left")
+        case None => withIso.withColumn("_m_f0", lit(null).cast("int"))
       }
+      val row = withFirst.agg(
+        count(when(scoped("_m_iso", isoRefRgdId), 1)).as("iso"),
+        count(when(runs.headOption
+          .map(r0 => scoped("_m_f0", r0.cfg.refRgdId))
+          .getOrElse(lit(false)), 1)).as("f0"),
+        coalesce(max(col("full_annot_key")), lit(0L)).as("mk")).head()
+      (row.getLong(0), row.getLong(1), row.getLong(2))
+    }
 
     // Materialization discipline, measured not guessed: each species'
     // logical plan nests the previous one's, so with plain cache() every
@@ -153,86 +133,6 @@ object PipelineRunner {
     // (warm wall fell >4x) and hands back the storage handle, so each
     // iteration releases the previous species' blocks deterministically —
     // no table-sized storage accumulates across harness invocations.
-
-    // OPT-IN concurrent incoming phase (r14): each species' incoming
-    // side — the full annotate spine — reads only its GAF and `dims`,
-    // never the evolving table (chinchilla's GAF is built from the
-    // TIME-ZERO table by the §3.3 contract), so the spines are
-    // data-independent until the merge and CAN be materialized
-    // concurrently, with the merges sequential below as joins of two
-    // materialized leaves. Output is bit-identical either way (digest
-    // pin green over both paths). Default is OFF because the A/B was
-    // MEASURED AGAINST it in this environment: on local[32] with one
-    // shared 8 GiB heap the harness row read 33s sequential-fused vs
-    // 67-72s concurrent (warm 47s vs 133s) — three co-resident incoming
-    // snapshots plus tripled aggregation state thrash storage/GC, and
-    // the separate incoming materialization pays a full extra
-    // write+read pass that the fused AnnotationPipeline.run never does
-    // (BASELINE.md r14). The knob exists for MULTI-EXECUTOR clusters,
-    // where the fills do not share one heap and one spine's barrier
-    // stalls would otherwise idle executors another spine could use —
-    // measure there before enabling; the failure path (one fill throws
-    // -> every sibling fill released) is spec-pinned either way.
-    //
-    // Plan BUILDING stays serial even when enabled (annotate's
-    // autoShuffle raises the session's AQE initial-partition floor
-    // monotonically, so by launch time the conf holds the max across
-    // spines); only the FILLS run concurrently — standard
-    // multi-threaded job submission, execution ids are thread-local.
-    val cols = existing.columns.toSeq
-    val incomingSnaps: Option[Seq[Snapshot.Snapped]] =
-      if (!concurrentIncoming || runs.size <= 1) None
-      else Some(timed("incoming_fill_concurrent") {
-        val incomingFrames = runs.map(r =>
-          AnnotationPipeline.incoming(r.gaf, dims, r.cfg, cols))
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(runs.size)
-        try {
-          // individual submits, not invokeAll: an InterruptedException
-          // from invokeAll discards the futures list, so fills that had
-          // ALREADY completed could never be drained — their persisted
-          // blocks would leak for the rest of the session (r14 advice;
-          // incomingSnaps is never assigned on this path, so the outer
-          // releaseIncoming cleanup cannot see them either)
-          val futures = incomingFrames.map { f =>
-            pool.submit((() => Snapshot.materialize(f)):
-              java.util.concurrent.Callable[Snapshot.Snapped])
-          }
-          val results =
-            try futures.map(f =>
-              try Right(f.get())
-              catch { case e: java.util.concurrent.ExecutionException =>
-                Left(e.getCause) })
-            catch { case ie: InterruptedException =>
-              // calling thread interrupted mid-await: cancel what
-              // hasn't run, give in-flight fills a bounded window to
-              // settle, release every fill that completed, rethrow
-              pool.shutdownNow()
-              try pool.awaitTermination(30,
-                java.util.concurrent.TimeUnit.SECONDS)
-              catch { case _: InterruptedException => () }
-              futures.foreach { f =>
-                if (f.isDone && !f.isCancelled)
-                  try f.get().release() catch { case _: Throwable => () }
-              }
-              throw ie
-            }
-          // surface the FIRST failure after all settle; release any
-          // fills that did succeed (nothing else can free them)
-          if (results.exists(_.isLeft)) {
-            results.foreach {
-              case Right(s) => s.release()
-              case Left(_) => ()
-            }
-            throw results.collectFirst { case Left(e) => e }.get
-          }
-          results.map(_.toOption.get)
-        } finally pool.shutdown()
-      })
-    val incReleased = Array.fill(runs.size)(false)
-    def releaseIncoming(i: Int): Unit = incomingSnaps.foreach { snaps =>
-      if (!incReleased(i)) { incReleased(i) = true; snaps(i).release() }
-    }
 
     var table = existing
     var prevRelease: Option[() => Unit] = None
@@ -250,9 +150,8 @@ object PipelineRunner {
     try {
       val perSpecies = runs.zipWithIndex.map { case (r, i) =>
         val initial = initialCarry.getOrElse(
-          timed(s"${r.name}_initial_count")(
-            refSpeciesCount(table, dims.rgdIds, r.cfg.refRgdId,
-              r.cfg.speciesTypeKey)))
+          refSpeciesCount(table, dims.rgdIds, r.cfg.refRgdId,
+            r.cfg.speciesTypeKey))
         val nextOpt = runs.lift(i + 1)
         val isLast = i == runs.size - 1
         val needsScope = r.cfg.refRgdId != 0
@@ -261,17 +160,8 @@ object PipelineRunner {
         // the SAME fill pass as observed aggregates over broadcast
         // scope markers — the full-outer join never re-executes and the
         // stored result is re-read only by the delete anti-joins.
-        // Sequential default: the FUSED annotate+merge plan (one pass —
-        // no separate incoming materialization); opt-in concurrent
-        // mode merges the pre-filled incoming leaf instead.
-        val mergeFrame = timed(s"${r.name}_plan_build")(incomingSnaps match {
-          case Some(snaps) => MergeSink.merge(
-            table, snaps(i).df, r.cfg.runTs, r.cfg.createdBy,
-            assignKeys = true, maxKeyOpt = maxKeyCarry)
-          case None =>
-            AnnotationPipeline.run(r.gaf, table, dims, r.cfg,
-              maxKeyOpt = maxKeyCarry)
-        })
+        val mergeFrame = AnnotationPipeline.run(r.gaf, table, dims, r.cfg,
+          maxKeyOpt = maxKeyCarry)
         // one marker per DISTINCT species scope this fill must count
         val marks = scala.collection.mutable.LinkedHashMap.empty[Int, String]
         def marker(speciesTypeKey: Int): String =
@@ -299,11 +189,7 @@ object PipelineRunner {
             col("annotated_object_rgd_id") === col(m), "left")
         }.observe(obs, metrics.head, metrics.tail: _*)
           .drop(marks.values.toSeq: _*)
-        val mergedSnap = timed(s"${r.name}_merge_fill")(
-          Snapshot.materialize(observed))
-        // the merge result is stored — this species' incoming blocks
-        // are dead from here
-        releaseIncoming(i)
+        val mergedSnap = Snapshot.materialize(observed)
         var mergedAdopted = false // did mergedSnap become `table`'s storage?
         try {
           val row = obs.get
@@ -311,14 +197,14 @@ object PipelineRunner {
             .map(o => o -> row(s"op_$o").asInstanceOf[Long])
             .filter(_._2 > 0).toMap
           val next = mergedSnap.df.drop("_op")
-          val (afterDelete, report) = timed(s"${r.name}_stale_delete")(
+          val (afterDelete, report) =
             if (!needsScope)
               (next, StaleReport(0, 0, aborted = false))
             else MergeSink.staleDeleteCounted(next, dims.rgdIds,
               r.cfg.refRgdId, r.cfg.speciesTypeKey, staleCutoff,
               r.cfg.createdBy, thresholdPct, initial,
               row("stale").asInstanceOf[Long],
-              row("current").asInstanceOf[Long]))
+              row("current").asInstanceOf[Long])
           if (afterDelete eq next) {
             // no rows removed: the stored merge IS the table (a column
             // projection over its leaf — no second materialization),
@@ -336,8 +222,7 @@ object PipelineRunner {
           } else {
             // delete fired: materialize the survivors and drop every
             // carried value measured over the pre-delete rows
-            val snap = timed(s"${r.name}_snapshot_fill")(
-              Snapshot.materialize(afterDelete))
+            val snap = Snapshot.materialize(afterDelete)
             prevRelease.foreach(_())
             prevRelease = Some(snap.release)
             table = snap.df
@@ -352,7 +237,7 @@ object PipelineRunner {
       // U5: rat-ISO stale delete vs the time-zero snapshot. The scoped
       // counts come from the last species' fill observation when its
       // table survived unchanged; otherwise count the table directly.
-      val (afterIso, isoReport) = timed("u5_iso_stale")(u5Carry match {
+      val (afterIso, isoReport) = u5Carry match {
         case Some((u5Stale, u5Current)) =>
           MergeSink.staleDeleteCounted(table, dims.rgdIds, isoRefRgdId,
             RAT, staleCutoff, u5CreatedBy, thresholdPct, isoInitial,
@@ -360,7 +245,7 @@ object PipelineRunner {
         case None =>
           MergeSink.staleDelete(table, dims.rgdIds, isoRefRgdId, RAT,
             staleCutoff, u5CreatedBy, thresholdPct, isoInitial)
-      })
+      }
 
       // finalTable: a NARROW plan (column projection, plus the U5
       // anti-join when it fired) over the run's one pinned
@@ -375,7 +260,6 @@ object PipelineRunner {
       RunReport(perSpecies, Some(isoReport), afterIso,
         prevRelease.getOrElse(() => ()))
     } catch { case e: Throwable =>
-      runs.indices.foreach(releaseIncoming)
       prevRelease.foreach(_())
       throw e
     }

@@ -43,21 +43,21 @@ object AnnotMerge {
       graft.functions.XrefMergeAgg.xref_merge(col(xrefCol), col(notesCol), cap)
         .as("_merged") +: passCols.map(c => max(col(c)).as(c))
 
-    val outCols =
-      if (emitIdx) df.columns.map(col) :+ col("_frag_idx")
-      else df.columns.map(col)
+    val xref = nullIfEmpty(col("_m.xref"))
+    val notes = nullIfEmpty(col("_m.notes"))
+    val fields = df.columns.map {
+      case `xrefCol` => xref.as(xrefCol)
+      // A3: NOTES identical to XREF_SOURCE carries no information
+      // (MAHDL.java:129-134)
+      case `notesCol` =>
+        when(notes === xref, lit(null)).otherwise(notes).as(notesCol)
+      case c => col(c)
+    }
     df.groupBy(keyCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
       .select(col("*"),
         posexplode(col("_merged")).as(Seq("_frag_idx", "_m")))
-      .withColumn(xrefCol, nullIfEmpty(col("_m.xref")))
-      .withColumn(notesCol, nullIfEmpty(col("_m.notes")))
-      .drop("_merged", "_m")
-      // A3: NOTES identical to XREF_SOURCE carries no information
-      // (MAHDL.java:129-134)
-      .withColumn(notesCol,
-        when(col(notesCol) === col(xrefCol), lit(null)).otherwise(col(notesCol)))
-      .select(outCols: _*)
+      .select((if (emitIdx) fields :+ col("_frag_idx") else fields): _*)
   }
 
   private def nullIfEmpty(c: org.apache.spark.sql.Column) =

@@ -150,9 +150,6 @@ object Audit {
                        existing: DataFrame): DataFrame = {
     import AnnotationPipeline._
     val spark = gaf.sparkSession
-    val tStart = System.nanoTime()
-    def dbg[A](n: String)(f: => A): A = graft.util.Debug.timed(
-      sys.env.contains("GRAFT_COUNTER_DEBUG"), "CDBG", n, tStart)(f)
 
     // ---- main pass: one end-to-end plan with observe() hooks at every
     // stage boundary — these counters cost ZERO extra scans (they
@@ -198,20 +195,19 @@ object Audit {
     // bounded driver precomputes (each a couple of driver-side collect
     // rounds) — run them concurrently (round 8; they were ~3.3s
     // sequential at sf0.1, ~1.8s overlapped)
-    val catalyticF = Future(dbg("closureBuild")(DagClosure
+    val catalyticF = Future(DagClosure
       .descendantsOf(dims.ontDag, "parent_term_acc", "child_term_acc",
         lit(Constants.CATALYTIC_ACTIVITY))
       .select(col("descendant").as("go_id"))
-      .union(spark.sql(s"SELECT '${Constants.CATALYTIC_ACTIVITY}' AS go_id"))))
+      .union(spark.sql(s"SELECT '${Constants.CATALYTIC_ACTIVITY}' AS go_id")))
     // ONE redirect-fixpoint walk feeds both resolve variants (main
     // species-scoped + the unmatched counter's any-species), halving the
     // chain-depth precomputation collects
-    val fixF = Future(dbg("fixBuild")(resolveFixpoint(dims)))
+    val fixF = Future(resolveFixpoint(dims))
     val catalytic = Await.result(catalyticF, Duration.Inf)
     val f4Hit = col("_n4c").isNotNull
     val f5Hit = !f4Hit && col("evidence") === "IPI" && col("_ipi").isNotNull
 
-    dbg("preQc")(())
     val obsQc = new Observation("qc")
     val qc = src
       .join(broadcast(not4curation.withColumn("_n4c", lit(1))),
@@ -235,7 +231,6 @@ object Audit {
     // reused exchange or a linear spine — never under a self-union of
     // the chain — or that action's accumulator would double-count; the
     // staging exchanges below enforce this.
-    dbg("qcBuilt")(())
 
     val fix = Await.result(fixF, Duration.Inf)
     val mainResolve = fix
@@ -340,31 +335,31 @@ object Audit {
     // is mostly the tier-cascade's fixed plan+broadcast work, which two
     // driver threads pay independently.
     val sideF = {
-      val triplesF = Future(dbg("side:triples")(Snapshot.materialize(qc
+      val triplesF = Future(Snapshot.materialize(qc
         .groupBy(col("db"), col("db_object_id"), col("gene_product_form_id"))
-        .agg(count(lit(1)).as("_n")))))
+        .agg(count(lit(1)).as("_n"))))
       val inactiveF = triplesF.map { t =>
         val notActive = dims.rgdIds
           .filter(col("object_key") === Constants.GENES_OBJECT_KEY &&
             col("object_status") =!= "ACTIVE")
           .select(col("rgd_id"))
-        dbg("side:inactive")(matchGenes(t.df, dims,
-            cfg.speciesTypeKey, Some(identityResolve(dims)))
+        matchGenes(t.df, dims, cfg.speciesTypeKey,
+            Some(identityResolve(dims)))
           .join(broadcast(notActive), Seq("rgd_id"), "left_semi")
           .agg(coalesce(sum(col("_n")), lit(0L)).cast("long"))
-          .head().getLong(0))
+          .head().getLong(0)
       }
       val unmatchedF = triplesF.map { t =>
         val matchedKeys = matchGenes(t.df, dims, cfg.speciesTypeKey,
             Some(anyResolve))
           .select(col("db"), col("db_object_id"))
           .dropDuplicates("db", "db_object_id")
-        dbg("side:unmatched")(t.df
+        t.df
           .groupBy(col("db"), col("db_object_id"))
           .agg(sum(col("_n")).as("_n"))
           .join(matchedKeys, Seq("db", "db_object_id"), "left_anti")
           .agg(coalesce(sum(col("_n")), lit(0L)).cast("long"))
-          .head().getLong(0))
+          .head().getLong(0)
       }
       val both = for { i <- inactiveF; u <- unmatchedF } yield (i, u)
       // release the triples storage once BOTH cascades finish (success
@@ -376,7 +371,7 @@ object Audit {
     // ONE spine compute (qc -> match -> build -> enrich), lineage-
     // truncated — see the fill-discipline note. Launched AFTER the side
     // future so the dimension-sized cascades overlap this fill.
-    val enrichedSnap = dbg("enrichedFill")(Snapshot.materialize(enrichedPlan))
+    val enrichedSnap = Snapshot.materialize(enrichedPlan)
     releases += enrichedSnap.release
     val enriched = enrichedSnap.df
     val enrichedN = enrichedSnap.rows
@@ -398,13 +393,8 @@ object Audit {
         count(when(col("_frag_idx") >= 1, 1)).as("overflow"))
       .drop("_frag_idx")
 
-    val incoming = mergedA2
-      .withColumn("full_annot_key", lit(null).cast("long"))
-      .withColumn("created_date", lit(null).cast("timestamp"))
-      .withColumn("last_modified_date", lit(null).cast("timestamp"))
-      .withColumn("created_by", lit(cfg.createdBy))
-      .withColumn("last_modified_by", lit(cfg.createdBy))
-      .select(existing.columns.map(col): _*)
+    val incoming = AnnotationPipeline.incoming(mergedA2, cfg,
+      existing.columns.toSeq)
     // _op branch counts ride the main action as observed conditional
     // counts (the _op domain is closed: insert/update/touch/keep, and
     // only the first three are dumped) — the former groupBy(_op) job and
@@ -458,7 +448,7 @@ object Audit {
     // line identity is the 128-bit (_row_id, _row_id2) pair (see
     // matchGenes); keeper choice orders by the struct, lexicographic
     val rid = struct(col("_row_id"), col("_row_id2"))
-    val linesRemovedF = Future(dbg("linesRemoved")({
+    val linesRemovedF = Future {
       val keepers = enriched.filter(nonEmptyWi)
         .groupBy(consolidationKey.map(col): _*)
         .agg(min(rid).as("_r"))
@@ -470,7 +460,7 @@ object Audit {
         .groupBy(col("_r"))
         .agg(max(col("_k")).as("_k"))
         .filter(col("_k") === 0).count()
-    }))
+    }
 
 
     // THE MAIN ACTION: updatedOrigCreatedDate as one GLOBAL aggregation
@@ -496,11 +486,9 @@ object Audit {
         .agg(count(when(col("_op") === "update" &&
             !(col("original_created_date") <=> col("_old_ocd")), 1))
           .cast("long"))
-    dbg("main:plan")(mainFrame.queryExecution.executedPlan)
-    val updOrigN = dbg("main")(mainFrame.head().getLong(0))
+    val updOrigN = mainFrame.head().getLong(0)
     val truncatedN = cnt(obsA2.get)("overflow")
 
-    dbg("tailStart")(())
     val opsC = cnt(obsOps.get) _
     val m = cnt(obsMatch.get) _
     val b = cnt(obsBuilt.get) _

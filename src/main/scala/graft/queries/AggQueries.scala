@@ -347,17 +347,15 @@ object AggQueries extends QueryPack {
     "ev_dedup_incremental" -> ((s, d) => {
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      def sdbg[A](n: String)(f: => A): A = graft.util.Debug.timed(
-        sys.env.contains("GRAFT_STREAM_DEBUG"), "SDBG", n)(f)
       val docs = Tables.documents(s, d)
       val batch = docs.filter(pmod($"doc_id", lit(3)) === 0)
         .select($"doc_id", $"text")
       // the (session, dir)-memoized stored-filter fixture shared with
       // the curate increment rows (see Fixtures scaladoc)
-      val idx = sdbg("idx")(Fixtures.histBloomIdx(s, d))
+      val idx = Fixtures.histBloomIdx(s, d)
       val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-      val rows = sdbg("collect")(batch.orderBy($"doc_id").collect()
-        .map(r => (r.getLong(0), r.getString(1), t0)).toSeq)
+      val rows = batch.orderBy($"doc_id").collect()
+        .map(r => (r.getLong(0), r.getString(1), t0)).toSeq
       val input = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String, java.sql.Timestamp)]
       val sink = "ev_dedup_incremental_" +
@@ -379,7 +377,7 @@ object AggQueries extends QueryPack {
       val shufKey = "spark.sql.shuffle.partitions"
       val oldShuf = s.conf.get(shufKey)
       s.conf.set(shufKey, "8")
-      val q = try sdbg("start")({
+      val q = try {
         graft.streaming.IncrementalStream.incrementalDedupStream(
             input.toDF().toDF("doc_id", "text", "ts"), idx,
             "doc_id", "text", "ts", watermarkDelay = "1 hour",
@@ -388,7 +386,7 @@ object AggQueries extends QueryPack {
           .writeStream.format("memory").queryName(sink)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .start()
-      }) finally s.conf.set(shufKey, oldShuf)
+      } finally s.conf.set(shufKey, oldShuf)
       try {
         // one addData block = ONE input partition for the micro-batch,
         // and classify's minhash chain is map-only — a single block
@@ -397,23 +395,19 @@ object AggQueries extends QueryPack {
         // layout a real partitioned source (Kafka) would provide; the
         // kept-id SET is per-key state, unchanged by input partitioning
         // on dup-free fixture batches (digest-pinned).
-        sdbg("batch1")({
-          val chunk = math.max(1, rows.size / 32)
-          rows.grouped(chunk).foreach(c => input.addData(c))
-          q.processAllAvailable()
-        })
+        val chunk = math.max(1, rows.size / 32)
+        rows.grouped(chunk).foreach(c => input.addData(c))
+        q.processAllAvailable()
         // increment 2: the first batch doc's text under a fresh id — a
         // content dup either way (against history via the Bloom probe,
         // or across batches via the stream state); must not emit
         val dupText = rows.head._2
-        sdbg("batch2")({
-          input.addData(Seq((9999999L, dupText,
-            java.sql.Timestamp.valueOf("2026-01-01 00:00:01"))))
-          q.processAllAvailable()
-        })
-      } finally sdbg("stop")(q.stop())
+        input.addData(Seq((9999999L, dupText,
+          java.sql.Timestamp.valueOf("2026-01-01 00:00:01"))))
+        q.processAllAvailable()
+      } finally q.stop()
       val out = s.table(sink).select($"doc_id")
-      val kept = sdbg("sinkread")(out.collect())
+      val kept = out.collect()
       s.catalog.dropTempView(sink)
       s.createDataFrame(java.util.Arrays.asList(kept: _*), out.schema)
     }),

@@ -82,10 +82,10 @@ object Pq {
   private def trainOnPersisted(vectors: DataFrame,
                                m: Int, ksub: Int,
                                iterations: Int): PqModel = {
-    val seedRows = Similarity.tt("pq_seed_collect")(vectors
+    val seedRows = vectors
       .orderBy(xxhash64(col("v_id")), col("v_id"))
       .limit(ksub)
-      .select(col("v_vec")).collect())
+      .select(col("v_vec")).collect()
     require(seedRows.length == ksub,
       s"sample has only ${seedRows.length} rows for ksub=$ksub seeds")
     val seedVecs = seedRows.map(_.getSeq[Number](0).map(_.doubleValue()).toArray)
@@ -123,7 +123,7 @@ object Pq {
         .groupBy(col("s"), col("code"))
         .agg(graft.functions.VecDecimalMeanAgg
           .vec_decimal_mean(col("sub")).as("mean_sub"))
-      val cellRows = Similarity.tt("pq_iter")(cells.collect())
+      val cellRows = cells.collect()
       val next = codebooks.map(_.clone())
       cellRows.foreach { r =>
         val s = r.getInt(0); val c = r.getInt(1)

@@ -25,16 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Phase timing for training scale probes (set GRAFT_TRAIN_TIMING=1);
-    * zero-cost when unset. */
-  private val trainTiming = sys.env.contains("GRAFT_TRAIN_TIMING")
-  private[similarity] def tt[T](name: String)(f: => T): T =
-    if (!trainTiming) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"TRAIN $name ${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-    }
-
   /** Sequential-fold dot product (deterministic order). Native codegen'd
     * expression with exact HOF-fold parity — see
     * [[graft.functions.DotProductExpr]]; NativeExprSpec pins equality
@@ -184,8 +174,7 @@ object Similarity {
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
     }
     val vectors = sample.select(col(id).as("v_id"), col(vec).as("v_vec"))
-    var cents = tt("ivf_seed_localize")(
-      localize(seeds.select(col("cent_id"), col("cent_vec"))))
+    var cents = localize(seeds.select(col("cent_id"), col("cent_vec")))
     (1 to iterations).foreach { _ =>
       // one-pass exact-decimal array mean (r13): bit-identical to the
       // old posexplode + avg(decimal) + collect_list reassembly
@@ -196,9 +185,9 @@ object Similarity {
         .groupBy(col("cent_id"))
         .agg(graft.functions.VecDecimalMeanAgg
           .vec_decimal_mean(col("v_vec")).as("new_vec"))
-      cents = tt("ivf_iter")(localize(cents.join(means, Seq("cent_id"), "left")
+      cents = localize(cents.join(means, Seq("cent_id"), "left")
         .select(col("cent_id"),
-          coalesce(col("new_vec"), col("cent_vec")).as("cent_vec"))))
+          coalesce(col("new_vec"), col("cent_vec")).as("cent_vec")))
     }
     cents
   }
@@ -458,14 +447,13 @@ object Similarity {
     val spark = sample.sparkSession
     val vectors = sample.select(col(id).as("v_id"), col(vec).as("v_vec"))
     val coarseSeeds = hashRankedSeeds(vectors, "v_id", "v_vec", coarseK)
-    val coarse = tt("tl_coarse_lloyd")(trainIvfCentroids(vectors, coarseSeeds,
-      iterations = iterations, id = "v_id", vec = "v_vec"))
+    val coarse = trainIvfCentroids(vectors, coarseSeeds,
+      iterations = iterations, id = "v_id", vec = "v_vec")
     // consumed by the fine-seed window plus once per Lloyd iteration —
     // localCheckpoint so the coarse argmax over the sample runs ONCE
-    val withCoarse = tt("tl_assign_checkpoint")(
-      assignToCentroids(vectors, coarse)
-        .withColumnRenamed("cent_id", "coarse_id")
-        .localCheckpoint())
+    val withCoarse = assignToCentroids(vectors, coarse)
+      .withColumnRenamed("cent_id", "coarse_id")
+      .localCheckpoint()
     // the fine budget (coarseK·fineK total) is allocated PROPORTIONALLY
     // to coarse cell population, not fineK-per-cell: Lloyd coarse cells
     // are naturally skewed, and a uniform quota under-quantizes the big
@@ -476,9 +464,8 @@ object Similarity {
     // Largest-remainder rounding with id tiebreak + a 1-seed floor per
     // live cell: deterministic, Σquota ∈ [kTot, kTot + #subfloor cells).
     val kTot = coarseK.toLong * fineK
-    val cellSizes = tt("tl_cell_sizes")(
-      withCoarse.groupBy(col("coarse_id")).count().collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1))
+    val cellSizes = withCoarse.groupBy(col("coarse_id")).count().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     require(cellSizes.nonEmpty,
       "trainTwoLevelCentroids: empty sample — no vectors to seed or " +
         "train a quantizer from (filter upstream produced zero rows?)")
@@ -545,10 +532,10 @@ object Similarity {
           .drop("_cells")
       var fine = seedFrame.localCheckpoint()
       (1 to iterations).foreach { _ =>
-        val means = tt("tl_fine_iter_dist")(assignFine(fine)
+        val means = assignFine(fine)
           .groupBy(col("coarse_id"), col("fine_id"))
           .agg(graft.functions.VecDecimalMeanAgg
-            .vec_decimal_mean(col("v_vec")).as("new_vec")))
+            .vec_decimal_mean(col("v_vec")).as("new_vec"))
         fine = fine.join(means, Seq("coarse_id", "fine_id"), "left")
           .select(col("coarse_id"), col("fine_id"),
             coalesce(col("new_vec"), col("cent_vec")).as("cent_vec"))
@@ -561,10 +548,8 @@ object Similarity {
         coarse.filter(col("cent_id").isInCollection(live)),
         fine, stride.toInt, literalOk = false)
     }
-    var fineLocal: Array[(Long, Long, Seq[Double])] =
-      tt("tl_fine_seed_collect")(seedFrame.collect())
-        .map(r => (r.getLong(0), r.getLong(1),
-          r.getSeq[Double](2)))
+    var fineLocal: Array[(Long, Long, Seq[Double])] = seedFrame.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2)))
     (1 to iterations).foreach { _ =>
       val cellsMap: Map[Long, Seq[(Long, Seq[Double])]] = fineLocal.toSeq
         .groupBy(_._1)
@@ -574,14 +559,14 @@ object Similarity {
       // (r13) — values bit-identical to the old explode chain; the
       // assignment is bit-identical to the old broadcast-join
       // nearest_in_cell (NativeExprSpec pins both)
-      val means = tt("tl_fine_iter")(withCoarse
+      val means = withCoarse
         .withColumn("fine_id",
           graft.functions.NearestInCellsLitExpr.nearest_in_cells_lit(
             col("v_vec"), col("coarse_id"), cellsMap))
         .groupBy(col("coarse_id"), col("fine_id"))
         .agg(graft.functions.VecDecimalMeanAgg
           .vec_decimal_mean(col("v_vec")).as("new_vec"))
-        .collect())
+        .collect()
       val moved = means.map(r =>
         (r.getLong(0), r.getLong(1)) -> r.getSeq[Double](2)).toMap
       // a fine cluster that captures no member keeps its position

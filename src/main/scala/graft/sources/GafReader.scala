@@ -35,10 +35,14 @@ object GafReader {
       .select(cols: _*)
   }
 
-  /** Taxon id (integer) parsed from GAF c12 `taxon:NNNN[|taxon:MMMM]`. */
+  /** Taxon id (integer) parsed from GAF c12 `taxon:NNNN[|taxon:MMMM]`.
+    * A taxon with no digits or past the Int range reads as null (try_cast:
+    * a plain cast raises under ANSI mode), so the line matches no species
+    * and is skipped, as the reference's splitter skips it.
+    */
   def taxonId(df: DataFrame): DataFrame =
     df.withColumn("taxon_id",
-      regexp_extract(col("taxon"), "taxon:(\\d+)", 1).cast("int"))
+      regexp_extract(col("taxon"), "taxon:(\\d+)", 1).try_cast("int"))
 
   /** S3+S4: all-species demultiplexer — one pass over the giant GAF,
     * partitioned write by taxon (AllSpeciesFileSplitter.java:75-142;

@@ -204,8 +204,7 @@ class RunnerSpec extends SparkSpec {
     } finally report.release()
   }
 
-  test("concurrent incoming phase: a species whose fill fails releases " +
-      "every sibling's already-filled snapshot (r14 failure path)") {
+  test("a failing species fill surfaces its error and releases every snapshot") {
     val dims = Fixtures.dims(spark)
     val runTs = ts("2026-01-02 00:00:00")
     val cutoff = ts("2026-01-01 23:50:00")
@@ -215,9 +214,9 @@ class RunnerSpec extends SparkSpec {
         ts("2025-06-01 00:00:00"), symbol = "Chin1"))
     val mouse = PipelineRunner.SpeciesRun("mouse",
       Fixtures.mouseGaf(spark), Fixtures.mouseConfig(runTs))
-    // a GAF whose scan THROWS at fill time (not analysis time): the
-    // concurrent phase must surface the failure after all fills settle
-    // and release the sibling fills that did succeed
+    // a GAF whose scan THROWS at fill time (not analysis time): the run
+    // must surface the failure and release the mouse species' merge,
+    // which it had already filled and adopted as the table
     val poisoned = PipelineRunner.SpeciesRun("poisoned",
       Fixtures.mouseGaf(spark).withColumn("db",
         when(length(col("db")) >= 0,
@@ -226,7 +225,7 @@ class RunnerSpec extends SparkSpec {
       Fixtures.mouseConfig(runTs))
     val e = intercept[Exception] {
       PipelineRunner.runAll(existing, dims, Seq(mouse, poisoned),
-        REF_ISO, cutoff, concurrentIncoming = true)
+        REF_ISO, cutoff)
     }
     // the surfaced failure must be the INJECTED one, proving it came
     // from the fill (not from analysis or an unrelated phase): walk the
@@ -240,28 +239,6 @@ class RunnerSpec extends SparkSpec {
       s"surfaced failure is not the injected fill failure: $chain")
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
     assert(leaked.isEmpty,
-      s"failed concurrent fill leaked persistent RDDs: $leaked")
-  }
-
-  test("concurrent incoming phase produces bit-identical output to the " +
-      "sequential-fused default") {
-    val dims = Fixtures.dims(spark)
-    val runTs = ts("2026-01-02 00:00:00")
-    val cutoff = ts("2026-01-01 23:50:00")
-    val existing = table(
-      annotRow(1, "GO:0001", "term one", 1007, "IDA", 555, 100,
-        ts("2025-06-01 00:00:00"), symbol = "Chin1"),
-      annotRow(2, "GO:0002", "term two", 1006, "ISO", REF_ISO, CREATED_BY,
-        ts("2025-06-01 00:00:00"), withInfo = "RGD:9999"))
-    def rows(concurrent: Boolean): Set[Seq[Any]] = {
-      val report = PipelineRunner.runAll(existing, dims,
-        Seq(PipelineRunner.SpeciesRun("mouse",
-            Fixtures.mouseGaf(spark), Fixtures.mouseConfig(runTs)),
-          PipelineRunner.chinchillaRun(existing, dims, REF_ISO, runTs)),
-        REF_ISO, cutoff, concurrentIncoming = concurrent)
-      try report.finalTable.collect().map(_.toSeq).toSet
-      finally report.release()
-    }
-    assert(rows(concurrent = false) === rows(concurrent = true))
+      s"failed fill leaked persistent RDDs: $leaked")
   }
 }

@@ -84,4 +84,22 @@ class SourcesSpec extends SparkSpec {
       coalesce(col(c), lit("")).as(c)): _*)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
+
+  test("splitByTaxon drops lines whose taxon does not parse to an int") {
+    import spark.implicits._
+    def line(id: String, taxon: String): String =
+      Seq("UniProtKB", id, "SYM", "", "GO:0005515", "PMID:1", "IPI", "",
+        "F", "name", "", "protein", taxon, "20200101", "UniProt", "", "")
+        .mkString("\t")
+    val lines = Seq(
+      line("P00001", "taxon:9606"),
+      line("P00002", "taxon:"),
+      line("P00003", ""),
+      line("P00004", "taxon:99999999999")).toDF("value")
+    val dir = Files.createTempDirectory("graft_demux").toString + "/out"
+    GafReader.splitByTaxon(GafReader.fromLines(lines), Seq(9606), dir)
+    val written = spark.read.parquet(dir)
+    assert(written.select("db_object_id", "taxon_id").collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSeq === Seq(("P00001", 9606)))
+  }
 }
