@@ -67,13 +67,6 @@ object Tables {
     else df
   }
 
-  /** `df.limit(n).collect()` as ONE full-parallelism job. Plain
-    * limit+collect runs CollectLimitExec's incremental partition probing
-    * (1, then 4x, ...) — several sequential rounds when the limit is a
-    * driver-size CAP that the whole input fits under, which is the
-    * adaptive-collect pattern (DagClosure, resolveGeneIds). Scoped conf
-    * override, restored after the job.
-    */
   /** Collapse a DIM-SIZED frame to a LOCAL relation when it fits the
     * driver (r17): plans that embed derived dimension subtrees at many
     * places (the annotate spine joins dims ~10 times, three species per
@@ -91,6 +84,13 @@ object Tables {
       java.util.Arrays.asList(rows: _*), df.schema)
   }
 
+  /** `df.limit(n).collect()` as ONE full-parallelism job. Plain
+    * limit+collect runs CollectLimitExec's incremental partition probing
+    * (1, then 4x, ...) — several sequential rounds when the limit is a
+    * driver-size CAP that the whole input fits under, which is the
+    * adaptive-collect pattern (DagClosure, resolveGeneIds). Scoped conf
+    * override, restored after the job.
+    */
   def limitCollect(df: DataFrame, n: Int): Array[org.apache.spark.sql.Row] = {
     val spark = df.sparkSession
     // serialized per session: concurrent set/restore of the conf key

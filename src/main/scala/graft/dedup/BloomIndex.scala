@@ -45,11 +45,19 @@ object BloomIndex {
     * a Bloom filter cannot grow, so once `inserted` passes the budget
     * the real fpp silently degrades past the requested one — [[fold]]
     * guards that loudly instead.
+    *
+    * `id` is unique per constructed Index in this JVM (every build,
+    * fold, rebuild and load makes a new one), so memo keys can name an
+    * index without hashing its filters.
     */
   final case class Index(fp: BloomFilter, band: BloomFilter,
                          k: Int, bands: Int,
                          expectedItems: Long, inserted: Long)
-      extends Serializable
+      extends Serializable {
+    val id: Long = nextIndexId.incrementAndGet()
+  }
+
+  private val nextIndexId = new java.util.concurrent.atomic.AtomicLong()
 
   /** Fold `df`'s exact fingerprints and LSH band keys into Bloom
     * filters. `expectedItems` is the DOCUMENT count: the fp filter

@@ -500,6 +500,15 @@ object Dedup {
       .unionByName(df.sparkSession.range(1)
         .select(lit("geom").as("kind"), lit(s"$k|$bands").as("key")))
 
+  /** Identity-keyed memo for [[indexGeometry]] ([[graft.SessionMemo]]):
+    * the marker is written exactly once per store/index and never
+    * changes, so the 2-row probe job runs once per frame OBJECT instead
+    * of once per consumer (load validates, the stored classify
+    * re-checks, the fold re-reads).
+    */
+  private val geomCache =
+    new graft.SessionMemo[DataFrame, (Int, Int)]()(_.sparkSession)
+
   /** Read the index's banding geometry off its marker row (bounded
     * 2-row driver read). The marker must exist EXACTLY once: an index
     * with no geom row (filtered/projected subset, or keys persisted
@@ -507,31 +516,16 @@ object Dedup {
     * different geometry unioned) must fail loudly here — classifying
     * against it would silently leak every near-dup as `kept`.
     */
-  /** Identity-keyed memo for [[indexGeometry]] (r16 optimization round):
-    * the marker is written exactly once per store/index and never
-    * changes, so the 2-row probe job runs once per frame OBJECT instead
-    * of once per consumer (load validates, the stored classify
-    * re-checks, the fold re-reads — four probe jobs per stored cycle
-    * before this). Same freshness contract as [[graft.Memo]]: data
-    * re-written under a reused frame object is the caller's bug.
-    */
-  private val geomCache = new java.util.concurrent.ConcurrentHashMap[
-    DataFrame, (Int, Int)]()
-
-  private[dedup] def indexGeometry(index: DataFrame): (Int, Int) = {
-    graft.Memo.maintain(geomCache)(_.sparkSession)
-    geomCache.computeIfAbsent(index, readIndexGeometry)
-  }
+  private[dedup] def indexGeometry(index: DataFrame): (Int, Int) =
+    geomCache(index)(readIndexGeometry(index))
 
   /** Seed the identity memo with geometry already validated elsewhere
-    * (DedupIndexIO's (session, dir, stamp)-keyed store memo): the loaded
-    * frame's downstream [[indexGeometry]] probes then hit without a job.
-    * The r16 identity memo never hit for [[DedupIndexIO.append]]/load
-    * callers — each call builds a fresh frame object, so the memo only
-    * accumulated one-shot entries (r17 advice).
+    * (DedupIndexIO's store-stamped memo): the loaded frame's downstream
+    * [[indexGeometry]] probes then hit without a job — each
+    * [[DedupIndexIO.append]]/load call builds a fresh frame object.
     */
   private[dedup] def seedGeometry(index: DataFrame, geom: (Int, Int)): Unit =
-    geomCache.putIfAbsent(index, geom)
+    geomCache.seed(index, geom)
 
   private def readIndexGeometry(index: DataFrame): (Int, Int) = {
     val geom = index.filter(col("kind") === "geom")

@@ -1,5 +1,9 @@
 package graft.dedup
 
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -86,37 +90,40 @@ object DedupIndexIO {
     idx
   }
 
-  /** Store-keyed geometry memo (r17, advice item): the geometry marker
-    * is written exactly once by [[save]] and NEVER touched by appends,
-    * so for a given store path it is immutable — but every [[load]] /
-    * [[append]] call builds a FRESH frame object, so the identity-keyed
-    * [[Dedup.indexGeometry]] memo missed on all of them and each call
-    * paid a 2-row probe job. Keyed like SemanticIndexIO.loadCache by
-    * (session, dir) plus a freshness stamp over the marker partition's
-    * file statuses (mtime/len), which kills the delete-and-recreate-at-
-    * the-same-path stale-geometry hazard the bare (session, dir) key
-    * would have.
+  /** Store-keyed geometry memo: the geometry marker is written exactly
+    * once by [[save]] and never touched by appends, but every [[load]] /
+    * [[append]] call builds a fresh frame object, so the identity-keyed
+    * [[Dedup.indexGeometry]] memo alone would miss on each of them.
+    * Keyed by (session, dir, [[storeStamp]] of the marker partition).
     */
-  private val geomCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), (Int, Int)]()
+  private val geomCache =
+    new graft.SessionMemo[(SparkSession, String, Long), (Int, Int)]()(_._1)
 
-  private def geomStamp(spark: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir, "kind=geom")
+  private[dedup] def storedGeometry(spark: SparkSession, dir: String,
+                                    idx: => DataFrame): (Int, Int) = {
+    val p = new Path(dir, "kind=geom")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    geomCache.whenKeyed(storeStamp(fs, p).map((spark, dir, _)))(
+      Dedup.indexGeometry(idx))
+  }
+
+  /** Freshness stamp of a store path: an order-sensitive hash of the
+    * sorted (name, mtime, len) triples of the files under it (a file
+    * stamps itself). Spark names every written file with a fresh UUID,
+    * so a store deleted and re-created at the same path stamps
+    * differently even where mtimes and lengths repeat. `None` when the
+    * path cannot be listed — callers then compute without memoizing.
+    */
+  private[dedup] def storeStamp(fs: FileSystem, path: Path): Option[Long] =
     try {
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(p).iterator
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      fs.listStatus(path)
         .filterNot(_.getPath.getName.startsWith("_"))
-        .map(s => s.getModificationTime ^ (s.getLen * 1315423911L))
-        .foldLeft(0L)(_ ^ _)
-    } catch { case _: java.io.IOException => -1L }
-  }
-
-  private def storedGeometry(spark: SparkSession, dir: String,
-                             idx: => DataFrame): (Int, Int) = {
-    graft.Memo.maintain(geomCache)(_._1)
-    geomCache.computeIfAbsent((spark, dir, geomStamp(spark, dir)),
-      _ => Dedup.indexGeometry(idx))
-  }
+        .map(s => s"${s.getPath.getName}|${s.getModificationTime}|${s.getLen}\n")
+        .sorted
+        .foreach(t => md.update(t.getBytes(StandardCharsets.UTF_8)))
+      Some(ByteBuffer.wrap(md.digest()).getLong)
+    } catch { case _: java.io.IOException => None }
 
   /** Fold one increment's keys into the store —
     * [[Dedup.indexFold]]'s durable form. Geometry comes from the

@@ -904,36 +904,31 @@ object SemanticIndexIO {
       noteS, driftN)
   }
 
-  /** Loaded-handle memo (r16 optimization round): a generation tree is
-    * IMMUTABLE once sealed (appendSave/compact always commit a NEW gen
-    * and the sweep only deletes superseded ones), so the handle built
-    * for (dir, gen) can be reused for every later load that resolves to
-    * the same generation — repeat loads inside one increment cycle
-    * (classify + encode + fold each load today) skip the quantizer
-    * parquet footer reads and frame rebuilds. The CURRENT file's
-    * modification time rides the key so a store DELETED and re-created
-    * at the same path (gen counter resets) can never serve a stale
-    * handle. Bounded + dead-session-evicted via [[graft.Memo]].
+  /** Loaded-handle memo: a generation tree is IMMUTABLE once sealed
+    * (appendSave/compact always commit a NEW gen and the sweep only
+    * deletes superseded ones), so the handle built for (dir, gen) can be
+    * reused for every later load that resolves to the same generation —
+    * repeat loads inside one increment cycle (classify + encode + fold
+    * each load today) skip the quantizer parquet footer reads and frame
+    * rebuilds. The CURRENT file's [[DedupIndexIO.storeStamp]] rides the
+    * key so a store DELETED and re-created at the same path (gen counter
+    * resets) can never serve a stale handle.
     */
-  private val loadCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long, Long), Dedup.SemanticIndex]()
+  private val loadCache =
+    new graft.SessionMemo[(SparkSession, String, Long, Long), Dedup.SemanticIndex](
+      cap = 8)(_._1)
 
   def load(spark: SparkSession, dir: String): Dedup.SemanticIndex = {
     val (fs, d) = fsOf(spark, dir)
     val gen = currentGen(fs, d)
     require(gen >= 0, s"no committed semantic index under $dir " +
       s"(missing $CurrentFile — was save() ever completed here?)")
-    val mtime =
-      // IOException ONLY (r17 advice): a probe failure falls back to the
-      // -1 sentinel (both probes of a live store fail alike, so the key
-      // stays consistent); any other error is a real fault and must
-      // propagate, not silently serve a possibly-stale handle
-      try fs.getFileStatus(new Path(d, CurrentFile)).getModificationTime
-      catch { case _: java.io.IOException => -1L }
-    graft.Memo.maintain(loadCache, cap = 8)(_._1)
-    loadCache.computeIfAbsent((spark, d.toString, gen, mtime),
-      _ => loadGen(spark, fs, d, dir, gen))
+    loadCache.whenKeyed(currentStamp(fs, d).map((spark, d.toString, gen, _)))(
+      loadGen(spark, fs, d, dir, gen))
   }
+
+  private def currentStamp(fs: FileSystem, d: Path): Option[Long] =
+    DedupIndexIO.storeStamp(fs, new Path(d, CurrentFile))
 
   private def loadGen(spark: SparkSession, fs: FileSystem, d: Path,
                       dir: String, gen: Long): Dedup.SemanticIndex = {
@@ -1046,10 +1041,11 @@ object SemanticIndexIO {
     * for every [[prunedCodes]] call against the same sealed generation,
     * so the relation is memoized alongside [[loadCache]] and each call
     * only adds its own cells filter (which still prunes at planning
-    * time). Same immutability/mtime reasoning as loadCache.
+    * time). Same immutability/stamp reasoning as loadCache.
     */
-  private val codesBaseCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long, Long, Boolean), DataFrame]()
+  private val codesBaseCache =
+    new graft.SessionMemo[(SparkSession, String, Long, Long, Boolean), DataFrame](
+      cap = 8)(_._1)
 
   def prunedCodes(spark: SparkSession, dir: String,
                   cells: Seq[Long],
@@ -1057,35 +1053,30 @@ object SemanticIndexIO {
     val (fs, d) = fsOf(spark, dir)
     val gen = currentGen(fs, d)
     require(gen >= 0, s"no committed semantic index under $dir")
-    val mtime =
-      // IOException ONLY — same reasoning as load()'s probe above
-      try fs.getFileStatus(new Path(d, CurrentFile)).getModificationTime
-      catch { case _: java.io.IOException => -1L }
-    graft.Memo.maintain(codesBaseCache, cap = 8)(_._1)
-    val cut = codesBaseCache.computeIfAbsent(
-      (spark, d.toString, gen, mtime, genBound.isDefined), _ => {
-        val frags = manifest(fs, d, gen)
-        if (frags.isEmpty)
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](),
-            storedSchemas(fs, d, gen)._1)
-        else {
-          val base = spark.read.option("basePath", s"$d/$CodesRoot")
-          // the sidecar schema (when present) skips footer inference on
-          // BOTH paths (r16); the genBound read additionally needs the
-          // `gen` column declared so pre-stamp fragments read it as null
-          val hasSidecar = fs.exists(new Path(d, s"gen=$gen/schema.txt"))
-          val reader =
-            if (genBound.isDefined) {
-              val cs = storedSchemas(fs, d, gen)._1
-              base.schema(
-                if (cs.fieldNames.contains("gen")) cs
-                else cs.add("gen", org.apache.spark.sql.types.LongType))
-            } else if (hasSidecar) base.schema(storedSchemas(fs, d, gen)._1)
-            else base
-          reader.parquet(frags.map(f => s"$d/$CodesRoot/$f"): _*)
-        }
-      })
+    val cut = codesBaseCache.whenKeyed(currentStamp(fs, d)
+        .map((spark, d.toString, gen, _, genBound.isDefined))) {
+      val frags = manifest(fs, d, gen)
+      if (frags.isEmpty)
+        spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](),
+          storedSchemas(fs, d, gen)._1)
+      else {
+        val base = spark.read.option("basePath", s"$d/$CodesRoot")
+        // the sidecar schema (when present) skips footer inference on
+        // BOTH paths (r16); the genBound read additionally needs the
+        // `gen` column declared so pre-stamp fragments read it as null
+        val hasSidecar = fs.exists(new Path(d, s"gen=$gen/schema.txt"))
+        val reader =
+          if (genBound.isDefined) {
+            val cs = storedSchemas(fs, d, gen)._1
+            base.schema(
+              if (cs.fieldNames.contains("gen")) cs
+              else cs.add("gen", org.apache.spark.sql.types.LongType))
+          } else if (hasSidecar) base.schema(storedSchemas(fs, d, gen)._1)
+          else base
+        reader.parquet(frags.map(f => s"$d/$CodesRoot/$f"): _*)
+      }
+    }
     if (cut.schema.fieldNames.contains("cent_bucket")) {
       val filtered = cut.filter(col("cent_bucket").isin(cells: _*))
       genBound.fold(filtered)(g =>

@@ -51,8 +51,9 @@ object AnnotationPipeline {
     */
   val maxXdbBroadcastRows: Long = 20000000L
 
-  private val xdbGuardCache = new java.util.concurrent.ConcurrentHashMap[
-    (DataFrame, Long), java.lang.Boolean]()
+  /** One bounded xdb row count per (xdb frame, cap). */
+  private val xdbGuardCache =
+    new graft.SessionMemo[(DataFrame, Long), Unit]()(_._1.sparkSession)
 
   // ---------------------------------------------------------------- F2/A1
   /** Source-database filter (MAHParser.java:55-67). */
@@ -65,19 +66,8 @@ object AnnotationPipeline {
     * (MAHQC.java:69-75).
     */
   def qcTermFilters(gaf: DataFrame, dims: Dimensions): DataFrame = {
-    val not4curation = dims.ontSynonyms
-      .filter(col("synonym_name") === NOT4CURATION)
-      .select(col("term_acc").as("go_id")).distinct()
-    val catalytic = DagClosure
-      .descendantsOf(dims.ontDag, "parent_term_acc", "child_term_acc",
-        lit(CATALYTIC_ACTIVITY))
-      .select(col("descendant").as("go_id"))
-      .union(gaf.sparkSession.createDataFrame(
-        java.util.List.of[org.apache.spark.sql.Row](
-          org.apache.spark.sql.Row(CATALYTIC_ACTIVITY)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("go_id",
-            org.apache.spark.sql.types.StringType)))))
+    val not4curation = not4CurationTerms(dims)
+    val catalytic = catalyticTerms(dims)
 
     gaf
       .join(broadcast(not4curation), Seq("go_id"), "left_anti")
@@ -85,6 +75,25 @@ object AnnotationPipeline {
       .filter(!(col("evidence") === "IPI" && col("_ipi").isNotNull))
       .drop("_ipi")
   }
+
+  /** F4's term set: every term carrying a Not4Curation synonym (go_id). */
+  private[graft] def not4CurationTerms(dims: Dimensions): DataFrame =
+    dims.ontSynonyms
+      .filter(col("synonym_name") === NOT4CURATION)
+      .select(col("term_acc").as("go_id")).distinct()
+
+  /** F5's term set: GO:0003824 and its descendants (go_id). */
+  private[graft] def catalyticTerms(dims: Dimensions): DataFrame =
+    DagClosure
+      .descendantsOf(dims.ontDag, "parent_term_acc", "child_term_acc",
+        lit(CATALYTIC_ACTIVITY))
+      .select(col("descendant").as("go_id"))
+      .union(dims.ontDag.sparkSession.createDataFrame(
+        java.util.List.of[org.apache.spark.sql.Row](
+          org.apache.spark.sql.Row(CATALYTIC_ACTIVITY)),
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("go_id",
+            org.apache.spark.sql.types.StringType)))))
 
   // ---------------------------------------------------------------- J6
   /** Raw gene id -> final ACTIVE file-species gene id, as a dim-sized
@@ -113,21 +122,18 @@ object AnnotationPipeline {
     * species filterings of the SAME walk (main + any-species) pay the
     * chain-depth precomputation once.
     *
-    * Memoized on the dim frames' identity (dims are themselves memoized
-    * per (session, dir) by callers): the depth precompute collects the
-    * dims once per DISTINCT dim set instead of once per matchGenes call.
-    * Freshness contract: identity keying — data re-written under the
-    * same frame object serves the stale fixpoint, see [[graft.Memo]].
-    * Stopped-session entries evicted per call; cleared past 64 entries.
+    * Memoized per (rgdIds, history, maxHops) in a [[graft.SessionMemo]]
+    * (dims are themselves memoized per (session, dir) by callers): the
+    * depth precompute collects the dims once per DISTINCT dim set instead
+    * of once per matchGenes call.
     */
-  private val fixpointCache = new java.util.concurrent.ConcurrentHashMap[
-    (DataFrame, DataFrame, Int), DataFrame]()
+  private val fixpointCache =
+    new graft.SessionMemo[(DataFrame, DataFrame, Int), DataFrame]()(
+      _._1.sparkSession)
 
-  def resolveFixpoint(dims: Dimensions, maxHops: Int = 20): DataFrame = {
-    graft.Memo.maintain(fixpointCache)(_._1.sparkSession)
-    fixpointCache.computeIfAbsent((dims.rgdIds, dims.history, maxHops),
-      _ => localizeBounded(buildFixpoint(dims, maxHops)))
-  }
+  def resolveFixpoint(dims: Dimensions, maxHops: Int = 20): DataFrame =
+    fixpointCache((dims.rgdIds, dims.history, maxHops))(
+      localizeBounded(buildFixpoint(dims, maxHops)))
 
   /** Collapse a DIM-SIZED plan to a LOCAL relation when it fits the
     * driver (r17, guide §1.2 "per-task work" / §2.4): the fixpoint walk
@@ -311,16 +317,13 @@ object AnnotationPipeline {
     val xdbCap = gaf.sparkSession.conf
       .get("graft.match.maxXdbBroadcastRows", maxXdbBroadcastRows.toString)
       .toLong
-    // memoized per (xdb frame, cap): one bounded count per distinct dim
-    graft.Memo.maintain(xdbGuardCache)(_._1.sparkSession)
-    xdbGuardCache.computeIfAbsent((dims.xdb, xdbCap), { case (xdb, cap) =>
-      val xdbRows = xdb.limit((cap min Int.MaxValue - 1).toInt + 1).count()
-      require(xdbRows <= cap,
-        s"xdb accession dim holds > $cap rows — too large for the " +
+    xdbGuardCache((dims.xdb, xdbCap)) {
+      val xdbRows = dims.xdb.limit((xdbCap min Int.MaxValue - 1).toInt + 1).count()
+      require(xdbRows <= xdbCap,
+        s"xdb accession dim holds > $xdbCap rows — too large for the " +
           "set-valued broadcast in matchGenes; raise " +
           "graft.match.maxXdbBroadcastRows only with executor memory to match")
-      java.lang.Boolean.TRUE
-    })
+    }
     val xdbSets = broadcast(dims.xdb
       .join(broadcast(resolve), dims.xdb("rgd_id") === resolve("raw_rgd_id"),
         "left")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.gaf.{AnnotationPipeline, Constants, Dimensions, PipelineConfig}
-import graft.plans.{DagClosure, Snapshot}
+import graft.plans.Snapshot
 
 /** Observability — the reference's CounterPool (~20 named counters,
   * GoNonratAnnotationPipeline.java:180-234) and its 12 audit log files
@@ -37,24 +37,15 @@ object Audit {
 
   // -------------------------------------------- audit side outputs
   /** highLevelGoTerm.log — rows dropped by F4. */
-  def droppedNot4Curation(gaf: DataFrame, dims: Dimensions): DataFrame = {
-    val banned = dims.ontSynonyms
-      .filter(col("synonym_name") === Constants.NOT4CURATION)
-      .select(col("term_acc").as("go_id")).distinct()
-    gaf.join(broadcast(banned), Seq("go_id"), "left_semi")
-  }
+  def droppedNot4Curation(gaf: DataFrame, dims: Dimensions): DataFrame =
+    gaf.join(broadcast(AnnotationPipeline.not4CurationTerms(dims)),
+      Seq("go_id"), "left_semi")
 
   /** catalyticActivityIPIGoTerm.log — rows dropped by F5. */
-  def droppedCatalyticIpi(gaf: DataFrame, dims: Dimensions): DataFrame = {
-    val catalytic = DagClosure
-      .descendantsOf(dims.ontDag, "parent_term_acc", "child_term_acc",
-        lit(Constants.CATALYTIC_ACTIVITY))
-      .select(col("descendant").as("go_id"))
+  def droppedCatalyticIpi(gaf: DataFrame, dims: Dimensions): DataFrame =
     gaf.filter(col("evidence") === "IPI")
-      .join(broadcast(catalytic.union(
-        gaf.sparkSession.sql(s"SELECT '${Constants.CATALYTIC_ACTIVITY}' AS go_id"))),
+      .join(broadcast(AnnotationPipeline.catalyticTerms(dims)),
         Seq("go_id"), "left_semi")
-  }
 
   /** unmatched.log — source lines that matched no active gene. */
   def unmatched(gaf: DataFrame, dims: Dimensions, fileSpecies: Int): DataFrame = {
@@ -188,18 +179,12 @@ object Audit {
     try {
 
     // F4/F5 as observed markers — identical row set to qcTermFilters()
-    val not4curation = dims.ontSynonyms
-      .filter(col("synonym_name") === Constants.NOT4CURATION)
-      .select(col("term_acc").as("go_id")).distinct()
+    val not4curation = AnnotationPipeline.not4CurationTerms(dims)
     // the closure BFS and the redirect-fixpoint walk are independent
     // bounded driver precomputes (each a couple of driver-side collect
     // rounds) — run them concurrently (round 8; they were ~3.3s
     // sequential at sf0.1, ~1.8s overlapped)
-    val catalyticF = Future(DagClosure
-      .descendantsOf(dims.ontDag, "parent_term_acc", "child_term_acc",
-        lit(Constants.CATALYTIC_ACTIVITY))
-      .select(col("descendant").as("go_id"))
-      .union(spark.sql(s"SELECT '${Constants.CATALYTIC_ACTIVITY}' AS go_id")))
+    val catalyticF = Future(AnnotationPipeline.catalyticTerms(dims))
     // ONE redirect-fixpoint walk feeds both resolve variants (main
     // species-scoped + the unmatched counter's any-species), halving the
     // chain-depth precomputation collects

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
@@ -355,14 +353,13 @@ object Curate {
     // filters, so persistedManifest's canonicalized-OUTPUT key could
     // never hit; the r17 INPUT-keyed stagedManifest restores the
     // intended cross-invocation reuse the exact form always had — key =
-    // the increment's plan + the index OBJECT (identity: the index is
-    // itself a session-scoped fixture, and a rebuilt index is a new
-    // object, so a stale hit is impossible) + geometry. A fresh leaf
-    // per call also made every DOWNSTREAM manifest (keeper ids, gates)
-    // miss per call, which is what kept this row ~10x the exact form's
-    // steady state.
+    // the increment's plan + the index's construction id (unique per
+    // built/folded/loaded index in the JVM, so two indexes never share a
+    // manifest) + geometry. A fresh leaf per call also made every
+    // DOWNSTREAM manifest (keeper ids, gates) miss per call, which is
+    // what kept this row ~10x the exact form's steady state.
     val fresh = stagedManifest(newDocs,
-        s"bloomclassify|${System.identityHashCode(historyIndex)}|" +
+        s"bloomclassify|${historyIndex.id}|" +
           s"$textCol|${historyIndex.k}|${historyIndex.bands}") {
       graft.dedup.BloomIndex.classify(newDocs, historyIndex, textCol)
         .filter(col("status") === "kept").drop("status")
@@ -391,14 +388,10 @@ object Curate {
     * block storage was always LRU-bounded, but cache-manager entries and
     * their plan references were not. Canonicalization normalizes
     * expression ids, so structurally identical rebuilds (fresh reads of
-    * the same path) hit the same entry. Bounded: entries of stopped
-    * sessions are swept on every call (Memo.maintain's contract — they
-    * would pin plans of dead sessions for the JVM lifetime), and past
-    * [[ManifestCap]] distinct plans the memo unpersists-and-clears
-    * wholesale; callers owning long sessions with churning inputs can
-    * force it early via [[clearManifests]]. Freshness follows Memo's
-    * contract — same path re-written => stale entry; clearManifests()
-    * between releases.
+    * the same path) hit the same entry. A [[graft.SessionMemo]] capped
+    * at 32 distinct plans; callers owning long sessions with churning
+    * inputs can release it early via [[clearManifests]] (same path
+    * re-written => stale entry; clearManifests() between releases).
     *
     * Bench semantics (adjudicated round 6): a memo hit does NOT hide the
     * dedup cost from timed passes — the LSH edge build + union-find run
@@ -416,12 +409,11 @@ object Curate {
     * it (the curate rows ran 4-6s WARM over a 1 MB corpus — fixed plan
     * cost, the PipelineRunner/Audit disease); a leaf-planned manifest is
     * also literally the deployment shape (stage write, read back).
-    * Release goes through the Snapped handle in [[clearManifests]].
+    * Release goes through the Snapped handle.
     */
   private val manifestCache =
-    new ConcurrentHashMap[(SparkSession, LogicalPlan, String),
-      graft.plans.Snapshot.Snapped]
-  private val ManifestCap = 32
+    new graft.SessionMemo[(SparkSession, LogicalPlan, String),
+      graft.plans.Snapshot.Snapped](cap = 32, release = _.release())(_._1)
 
   private def persistedManifest(ids: DataFrame): DataFrame =
     manifestFor(ids, "", ids)
@@ -453,41 +445,13 @@ object Curate {
     manifestFor(input, tag, build)
 
   private def manifestFor(keyDf: DataFrame, tag: String,
-                          build: => DataFrame): DataFrame = {
-    val it = manifestCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
-    }
-    if (manifestCache.size > ManifestCap) clearManifests()
-    val key = (keyDf.sparkSession,
-      keyDf.queryExecution.analyzed.canonicalized, tag)
-    val hit = manifestCache.get(key)
-    if (hit != null) hit.df
-    else {
-      // materialize OUTSIDE the map: computeIfAbsent holds the bin lock
-      // for the mapping function's whole duration, and this one runs a
-      // full Spark job — a second thread materializing a different
-      // manifest in the same bin would block behind it, and a
-      // re-entrant computation would throw. Lose the race → release the
-      // duplicate storage and use the winner.
-      val snapped = graft.plans.Snapshot.materialize(build)
-      val prev = manifestCache.putIfAbsent(key, snapped)
-      if (prev == null) snapped.df
-      else { snapped.release(); prev.df }
-    }
-  }
+                          build: => DataFrame): DataFrame =
+    manifestCache((keyDf.sparkSession,
+        keyDf.queryExecution.analyzed.canonicalized, tag))(
+      graft.plans.Snapshot.materialize(build)).df
 
   /** Release every memoized manifest's storage and drop the memo
     * entries.
     */
-  def clearManifests(): Unit = {
-    val it = manifestCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      try {
-        if (!e.getKey._1.sparkContext.isStopped) e.getValue.release()
-      } catch { case _: Throwable => }
-      it.remove()
-    }
-  }
+  def clearManifests(): Unit = manifestCache.clear()
 }

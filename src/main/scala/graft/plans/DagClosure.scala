@@ -104,23 +104,18 @@ object DagClosure {
     * "is term a descendant of GO:0003824" as a broadcast semi-join).
     * Same adaptive strategy as [[closure]] but BFS only from the root.
     *
-    * Memoized on (edge frame identity, cols, root): qcTermFilters calls
-    * this once per annotate() invocation, and the collect + driver BFS
-    * cost ~1s regardless of ontology size. Freshness contract: identity
-    * keying means a caller that re-writes the data under `edges` must
-    * pass a NEW frame — see [[graft.Memo]]. Stopped-session entries are
-    * evicted on every call; bounded, cleared past 64 entries.
+    * Memoized per (edges, cols, root, maxIters) in a [[graft.SessionMemo]]:
+    * qcTermFilters calls this once per annotate() invocation, and the
+    * collect + driver BFS cost ~1s regardless of ontology size.
     */
-  private val descendantsCache = new java.util.concurrent.ConcurrentHashMap[
-    (DataFrame, String, String, String, Int), DataFrame]()
+  private val descendantsCache =
+    new graft.SessionMemo[(DataFrame, String, String, String, Int), DataFrame]()(
+      _._1.sparkSession)
 
   def descendantsOf(edges: DataFrame, parentCol: String, childCol: String,
-                    root: Column, maxIters: Int = 64): DataFrame = {
-    graft.Memo.maintain(descendantsCache)(_._1.sparkSession)
-    descendantsCache.computeIfAbsent(
-      (edges, parentCol, childCol, root.toString, maxIters),
-      _ => buildDescendantsOf(edges, parentCol, childCol, root, maxIters))
-  }
+                    root: Column, maxIters: Int = 64): DataFrame =
+    descendantsCache((edges, parentCol, childCol, root.toString, maxIters))(
+      buildDescendantsOf(edges, parentCol, childCol, root, maxIters))
 
   private def buildDescendantsOf(edges: DataFrame, parentCol: String,
                                  childCol: String, root: Column,

@@ -27,19 +27,14 @@ object CurationQueries extends QueryPack {
     * Persisting the tiny (id, 64-float) frame is also what a
     * deployment does between the embed and cluster stages.
     */
-  // value = (persisted base, filtered view): a racing loser must
-  // unpersist the BASE (unpersist on the derived filter frame is a
-  // cache-manager no-op — it only matches exact cached plans)
-  private val embCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
+  // value = (persisted base, filtered view): release unpersists the
+  // BASE (unpersist on the derived filter frame is a cache-manager no-op
+  // — it only matches exact cached plans)
+  private val embCache = new graft.SessionMemo[(SparkSession, String),
+    (DataFrame, DataFrame)](release = _._1.unpersist(blocking = false))(_._1)
 
   private def hashedEmb(s: SparkSession, d: String): DataFrame =
-    // shared memo helper (Fixtures.memo): compute outside the map —
-    // this runs a multi-second Spark fill that must not hold a
-    // ConcurrentHashMap bin lock
-    Fixtures.memo(embCache, s, d,
-        onLose = (v: (DataFrame, DataFrame)) =>
-          v._1.unpersist(blocking = false)) {
+    embCache((s, d)) {
       import s.implicits._
       // persist FIRST, filter on the cached arrays: a filter below the
       // persist gets pushed through the staged embedding projections

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,7 +16,7 @@ import graft.Tables
   * MEASURES (the per-increment steady state), recorded in BASELINE.md.
   *
   * Memos key on (SparkSession, dir) and live for the session (the
-  * stored-index shape); stopped sessions are swept on access.
+  * stored-index shape, [[graft.SessionMemo]]).
   */
 object Fixtures {
 
@@ -28,27 +26,6 @@ object Fixtures {
   def histDocs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, d).filter(pmod($"doc_id", lit(3)) =!= 0)
-  }
-
-  /** get → compute OUTSIDE the map → putIfAbsent: the compute runs a
-    * full Spark job, which must not hold a ConcurrentHashMap bin lock
-    * (same reasoning as Curate.persistedManifest). `onLose` releases a
-    * loser's resources when two threads race the same key.
-    */
-  private[queries] def memo[V](
-      m: ConcurrentHashMap[(SparkSession, String), V],
-                      s: SparkSession, d: String,
-                      onLose: V => Unit = (_: V) => ())(compute: => V): V = {
-    val it = m.keySet().iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    val key = (s, d)
-    val hit = m.get(key)
-    if (hit != null) hit
-    else {
-      val v = compute
-      val prev = m.putIfAbsent(key, v)
-      if (prev == null) v else { onLose(v); prev }
-    }
   }
 
   /** Index geometry taken FROM CurateConfig's defaults — the consuming
@@ -62,13 +39,12 @@ object Fixtures {
   /** History Bloom index (geometry = CurateConfig defaults). Bits are
     * order-independent, so the memo changes no digest.
     */
-  private val bloomIdx =
-    new ConcurrentHashMap[(SparkSession, String),
-      graft.dedup.BloomIndex.Index]()
+  private val bloomIdx = new graft.SessionMemo[(SparkSession, String),
+    graft.dedup.BloomIndex.Index]()(_._1)
 
   def histBloomIdx(s: SparkSession, d: String)
       : graft.dedup.BloomIndex.Index =
-    memo(bloomIdx, s, d) {
+    bloomIdx((s, d)) {
       val hist = histDocs(s, d)
       graft.dedup.BloomIndex.build(hist, "text",
         expectedItems = hist.count(), fpp = 0.001,
@@ -81,13 +57,11 @@ object Fixtures {
     * identical values either way. Session-lifetime pin, like the Bloom
     * filters: the index is the compact key set, not the corpus.
     */
-  private val exactIdx =
-    new ConcurrentHashMap[(SparkSession, String),
-      graft.plans.Snapshot.Snapped]()
+  private val exactIdx = new graft.SessionMemo[(SparkSession, String),
+    graft.plans.Snapshot.Snapped](release = _.release())(_._1)
 
   def histExactIdx(s: SparkSession, d: String): DataFrame =
-    memo(exactIdx, s, d,
-        onLose = (v: graft.plans.Snapshot.Snapped) => v.release()) {
+    exactIdx((s, d)) {
       graft.plans.Snapshot.materialize(
         graft.dedup.Dedup.dedupIndex(histDocs(s, d), "doc_id", "text",
           k = geomCfg.minhashK, bands = geomCfg.bands))
@@ -101,15 +75,12 @@ object Fixtures {
     * `vectors` frame stays lazy (deployment point-reads the stored
     * embedding table for the few re-rank candidates).
     */
-  private val semIdx =
-    new ConcurrentHashMap[(SparkSession, String),
-      graft.dedup.Dedup.SemanticIndex]()
+  private val semIdx = new graft.SessionMemo[(SparkSession, String),
+    graft.dedup.Dedup.SemanticIndex](release = _.codes.unpersist())(_._1)
 
   def histSemanticIdx(s: SparkSession, d: String)
       : graft.dedup.Dedup.SemanticIndex =
-    memo(semIdx, s, d,
-        onLose = (v: graft.dedup.Dedup.SemanticIndex) =>
-          v.codes.unpersist()) {
+    semIdx((s, d)) {
       val idx = graft.dedup.Dedup.semanticIndex(histDocs(s, d),
         "doc_id", "text")
       val codes = idx.codes.persist()
@@ -121,13 +92,12 @@ object Fixtures {
     * training is deterministic (exact-decimal updates, fixed iteration
     * count), so the memoized model scores identically to a fresh one.
     */
-  private val benchModelCache =
-    new ConcurrentHashMap[(SparkSession, String),
-      graft.text.QualityClassifier.Model]()
+  private val benchModelCache = new graft.SessionMemo[(SparkSession, String),
+    graft.text.QualityClassifier.Model]()(_._1)
 
   def benchModel(s: SparkSession, d: String)
       : graft.text.QualityClassifier.Model =
-    memo(benchModelCache, s, d) {
+    benchModelCache((s, d)) {
       import s.implicits._
       val bench = Tables.documents(s, d)
         .filter(pmod($"doc_id", lit(50)) === 0)

@@ -34,8 +34,8 @@ object SimilarityQueries extends QueryPack {
     * steady-state regime the bench measures. Quantizer sized ~√N (the
     * standard IVF balance point: probe work ≈ assignment work per probe).
     */
-  private val ivfCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
+  private val ivfCache = new graft.SessionMemo[(SparkSession, String),
+    (DataFrame, DataFrame)](release = _._1.unpersist())(_._1)
 
   /** Fresh (uncached) index construction — also what `sim_ivf_build`
     * times, so the one-time cost the cached probe amortizes is a
@@ -65,8 +65,8 @@ object SimilarityQueries extends QueryPack {
     * this point re-ranks to 1.00/0.86 recall@5 at sf0.01/sf0.1 while
     * m=8 geometries plateau lower at the same re-rank budget).
     */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Pq.PqModel, DataFrame)]()
+  private val pqCache = new graft.SessionMemo[(SparkSession, String),
+    (Pq.PqModel, DataFrame)](release = _._2.unpersist())(_._1)
 
   private def pqBuildFresh(s: SparkSession, d: String): (Pq.PqModel, DataFrame) = {
     import s.implicits._
@@ -79,8 +79,7 @@ object SimilarityQueries extends QueryPack {
   }
 
   def pqIndex(s: SparkSession, d: String): (Pq.PqModel, DataFrame) =
-    Fixtures.memo(pqCache, s, d,
-      onLose = (v: (Pq.PqModel, DataFrame)) => v._2.unpersist()) {
+    pqCache((s, d)) {
       val (model, encoded) = pqBuildFresh(s, d)
       val index = encoded.persist()
       index.count() // materialize the build
@@ -94,13 +93,12 @@ object SimilarityQueries extends QueryPack {
     * (PqSpec pins the equivalence), while scanning codes instead of
     * floats inside probed buckets.
     */
-  private val ivfpqCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Pq.PqModel, DataFrame, DataFrame)]()
+  private val ivfpqCache = new graft.SessionMemo[(SparkSession, String),
+    (Pq.PqModel, DataFrame, DataFrame)](release = _._2.unpersist())(_._1)
 
   def ivfPqIndex(s: SparkSession, d: String)
       : (Pq.PqModel, DataFrame, DataFrame) =
-    Fixtures.memo(ivfpqCache, s, d,
-      onLose = (v: (Pq.PqModel, DataFrame, DataFrame)) => v._2.unpersist()) {
+    ivfpqCache((s, d)) {
       val (_, centroids) = ivfIndex(s, d)
       val corpus = annCorpus(s, d)
       val sample = graft.operators.Sampling
@@ -114,12 +112,12 @@ object SimilarityQueries extends QueryPack {
     }
 
   def ivfIndex(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    ivfCache.computeIfAbsent((s, d), { case (s, d) =>
+    ivfCache((s, d)) {
       val (built, centroids) = buildFresh(s, d)
       val index = built.persist()
       index.count() // materialize the build
       (index, centroids)
-    })
+    }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

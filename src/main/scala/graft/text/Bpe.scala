@@ -277,18 +277,16 @@ object Bpe {
 
   /** Memoized per-(session, dir) training for harness queries: repeated
     * Bench/Verify invocations of the same query reuse one driver-side
-    * training run. Freshness contract: identity keying per [[graft.Memo]].
+    * training run ([[graft.SessionMemo]]).
     */
-  private val trainCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String, Int, Int, Boolean), Merges]()
+  private val trainCache =
+    new graft.SessionMemo[(SparkSession, String, String, Int, Int, Boolean), Merges]()(
+      _._1)
 
   def trainCached(spark: SparkSession, dir: String, df: => DataFrame,
                   textCol: String, numMerges: Int,
                   sampleDocs: Int = 512,
-                  byteLevel: Boolean = false): Merges = {
-    graft.Memo.maintain(trainCache)(_._1)
-    trainCache.computeIfAbsent(
-      (spark, dir, textCol, numMerges, sampleDocs, byteLevel),
-      _ => train(df, textCol, numMerges, sampleDocs, byteLevel))
-  }
+                  byteLevel: Boolean = false): Merges =
+    trainCache((spark, dir, textCol, numMerges, sampleDocs, byteLevel))(
+      train(df, textCol, numMerges, sampleDocs, byteLevel))
 }

@@ -19,7 +19,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 /** The single source of truth for the test-session config: suites that
   * must manage session lifecycle themselves (e.g. the stopped-session
-  * scenario in MemoSpec) build/restore through here, so the restored
+  * scenarios in SessionMemoSpec) build/restore through here, so the restored
   * session can't drift from the fixture's.
   */
 object SparkSpec {
