@@ -612,17 +612,16 @@ object AnnotationPipeline {
   /** annotate + classify-merge against the existing FULL_ANNOT snapshot. */
   def run(gaf: DataFrame, existing: DataFrame, dims: Dimensions,
           cfg: PipelineConfig): DataFrame =
-    run(gaf, existing, dims, cfg, maxKeyOpt = None)
+    run(gaf, existing, dims, cfg,
+      existing.agg(MergeSink.maxKeyAgg).head().getLong(0))
 
-  /** [[run]] with `maxKeyOpt` forwarded to [[MergeSink.merge]]
-    * (pre-computed `max(full_annot_key)` over `existing`, when the
-    * caller already has it from a fused action) — private[graft] like
-    * the merge overload it feeds: a wrong maxKey silently collides
+  /** [[run]] with `existing`'s max key already read — private[graft]
+    * like the merge overload it feeds: a wrong maxKey silently collides
     * insert surrogate keys.
     */
   private[graft] def run(gaf: DataFrame, existing: DataFrame, dims: Dimensions,
-          cfg: PipelineConfig, maxKeyOpt: Option[Long]): DataFrame =
+          cfg: PipelineConfig, maxKey: Long): DataFrame =
     MergeSink.merge(existing,
       incoming(annotate(gaf, dims, cfg), cfg, existing.columns.toSeq),
-      cfg.runTs, cfg.createdBy, assignKeys = true, maxKeyOpt = maxKeyOpt)
+      cfg.runTs, cfg.createdBy, assignKeys = true, maxKey = maxKey)
 }

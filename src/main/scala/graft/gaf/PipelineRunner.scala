@@ -1,7 +1,7 @@
 package graft.gaf
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.gaf.Constants._
 import graft.operators.MergeSink
@@ -27,13 +27,10 @@ object PipelineRunner {
   final case class SpeciesRun(name: String, gaf: DataFrame, cfg: PipelineConfig)
 
   /** @param finalTable the post-U5 table: a NARROW plan (column
-    *                    projection + the U5 anti-join when it fired) over
-    *                    the run's one pinned materialization. Each action
-    *                    re-pays only that narrow layer over stored leaves
-    *                    — callers wanting a single-leaf frame materialize
-    *                    / localCheckpoint it themselves (r16: the former
-    *                    unconditional final re-materialization copied the
-    *                    whole table into storage a second time)
+    *                    projection, plus the U5 delete's broadcast scope
+    *                    filter when it fired) over the run's one pinned
+    *                    materialization; callers wanting a single-leaf
+    *                    frame materialize it themselves
     * @param release    frees the storage backing finalTable — the only
     *                    storage the run leaves pinned; call after the
     *                    last use
@@ -44,20 +41,31 @@ object PipelineRunner {
       finalTable: DataFrame,
       release: () => Unit)
 
-  /** Scoped count for (ref, species) via the active-object semi-join (A8,
+  /** Scoped count for (ref, species): the brake's initial count (A8,
     * DAO.java:86-88).
     */
   def refSpeciesCount(table: DataFrame, rgdIds: DataFrame, refRgdId: Int,
                       speciesTypeKey: Int): Long =
-    table.filter(col("ref_rgd_id") === refRgdId)
-      .join(broadcast(rgdIds
-          .filter(col("species_type_key") === speciesTypeKey &&
-            col("object_status") === "ACTIVE").select("rgd_id")),
-        col("annotated_object_rgd_id") === col("rgd_id"), "left_semi")
-      .count()
+    MergeSink.scoped(table, rgdIds, speciesTypeKey, "_scope")
+      .filter(MergeSink.current("_scope", refRgdId)).count()
 
   /** Run every species in order (caller puts chinchilla last), then the
-    * rat-ISO stale delete against the time-zero snapshot.
+    * rat-ISO stale delete (U5) against the time-zero snapshot.
+    *
+    * Invariant: every value carried from one step to the next — a
+    * species' initial count, its merge's max key, and after the last
+    * species U5's stale and current counts — is observed over the frame
+    * that becomes `table`, in the pass that produces it: `existing` at
+    * time zero, the stored merge when the species' delete removes
+    * nothing, the stored survivors when it removes rows. The merge fill
+    * also observes its op counts and the species' own stale and current
+    * counts, so no step re-reads a table to count it.
+    *
+    * Each frame that becomes `table` is a [[Snapshot.materialize]]d
+    * leaf, so the next species' plan does not nest the previous ones
+    * (with plain cache() the nested plans' analysis alone ran ~71 s per
+    * multi-species row), and its storage is released as soon as the
+    * next frame replaces it.
     *
     * @param staleCutoff rows last modified before this are delete
     *                    candidates (run start − 10 min in the reference,
@@ -66,201 +74,107 @@ object PipelineRunner {
   def runAll(existing: DataFrame, dims: Dimensions, runs: Seq[SpeciesRun],
              isoRefRgdId: Int, staleCutoff: Timestamp,
              thresholdPct: Double = DELETE_THRESHOLD_PCT): RunReport = {
-    // ---- fused scoped-count machinery (r16 optimization round).
-    //
-    // The loop below used to pay, PER SPECIES, six driver actions over
-    // the evolving table: initial refSpeciesCount, the merge's internal
-    // max(full_annot_key), the _op groupBy, the stale + current counts
-    // inside staleDelete, and a second full materialization of the
-    // post-delete table — ~6 s of a 25 s row at sf0.1, all reading data
-    // the merge fill had JUST written. All of those are aggregates the
-    // fill pass itself can compute map-side (guide §2.4 "two operations
-    // keyed the same way can share one pass" + §1.5's observe): the
-    // merge frame gets dim-sized broadcast scope markers and ONE
-    // Observation carrying the op counts, this species' stale/current
-    // counts, the NEXT species' initial count, the U5 counts (last
-    // species only) and the running max key. When the species' stale
-    // delete fires (rows actually removed) the forward-looking numbers
-    // are measured over a superset of the surviving table, so they are
-    // DISCARDED and the old count-the-table path runs — correctness
-    // never rests on the fusion, it only removes redundant passes.
-    //
-    // A scope marker join can only multiply rows if the scope frame
-    // held duplicate rgd_ids, so it is built distinct() (dim-sized);
-    // counts then equal the semi-join counts refSpeciesCount /
-    // staleCandidates compute.
-    def scopeFrame(speciesTypeKey: Int, as: String): DataFrame =
-      dims.rgdIds
-        .filter(col("species_type_key") === speciesTypeKey &&
-          col("object_status") === "ACTIVE")
-        .select(col("rgd_id").as(as)).distinct()
-    def scoped(marker: String, refRgdId: Int): Column =
-      col("ref_rgd_id") === refRgdId && col(marker).isNotNull
-    def staleCond(marker: String, refRgdId: Int, createdBy: Int): Column =
-      scoped(marker, refRgdId) && col("created_by") === createdBy &&
-        col("last_modified_date") < lit(staleCutoff)
+    import MergeSink.{current, maxKeyAgg, stale}
     val u5CreatedBy = runs.headOption.map(_.cfg.createdBy).getOrElse(CREATED_BY)
+    def countIf(cond: Column, name: String): Column = count(when(cond, 1)).as(name)
+    def long(values: Map[String, Any], name: String): Long =
+      values(name).asInstanceOf[Long]
 
-    // U5 snapshot BEFORE any species runs — fused with the first
-    // species' initial count and the first merge's max-key aggregation
-    // (was three sequential driver actions over `existing`; one pass)
-    val (isoInitial, firstInitial, firstMaxKey) = {
-      val withIso = existing.join(
-        broadcast(scopeFrame(RAT, "_m_iso")),
-        col("annotated_object_rgd_id") === col("_m_iso"), "left")
-      val withFirst = runs.headOption match {
-        case Some(r0) => withIso.join(
-          broadcast(scopeFrame(r0.cfg.speciesTypeKey, "_m_f0")),
-          col("annotated_object_rgd_id") === col("_m_f0"), "left")
-        case None => withIso.withColumn("_m_f0", lit(null).cast("int"))
-      }
-      val row = withFirst.agg(
-        count(when(scoped("_m_iso", isoRefRgdId), 1)).as("iso"),
-        count(when(runs.headOption
-          .map(r0 => scoped("_m_f0", r0.cfg.refRgdId))
-          .getOrElse(lit(false)), 1)).as("f0"),
-        coalesce(max(col("full_annot_key")), lit(0L)).as("mk")).head()
-      (row.getLong(0), row.getLong(1), row.getLong(2))
+    /** `frame` observed by `metrics` over one scope marker per distinct
+      * species key (dim-sized broadcast joins, dropped again after).
+      */
+    def observed(frame: DataFrame, species: Seq[Int])(
+        metrics: (Int => String) => Seq[Column]): (DataFrame, Observation) = {
+      val marks = species.distinct.zipWithIndex.map { case (sp, i) => sp -> s"_m_$i" }
+      val ms = metrics(marks.toMap)
+      val obs = Observation()
+      (marks.foldLeft(frame) { case (df, (sp, m)) =>
+        MergeSink.scoped(df, dims.rgdIds, sp, m)
+      }.observe(obs, ms.head, ms.tail: _*).drop(marks.map(_._2): _*), obs)
     }
+    /** Materialize `frame` with its observation; the values it read. */
+    def fill(frame: DataFrame, species: Seq[Int])(
+        metrics: (Int => String) => Seq[Column]): (Snapshot.Snapped, Map[String, Any]) = {
+      val (df, obs) = observed(frame, species)(metrics)
+      (Snapshot.materialize(df), obs.get)
+    }
+    // what the step after a frame reads: the next species' initial
+    // count, or U5's counts after the last species
+    def forwardSpecies(next: Option[SpeciesRun]): Int =
+      next.fold(RAT)(_.cfg.speciesTypeKey)
+    def forward(next: Option[SpeciesRun], m: Int => String): Seq[Column] =
+      next match {
+        case Some(nx) =>
+          Seq(countIf(current(m(nx.cfg.speciesTypeKey), nx.cfg.refRgdId), "nextInitial"))
+        case None => Seq(
+          countIf(stale(m(RAT), isoRefRgdId, staleCutoff, u5CreatedBy), "u5stale"),
+          countIf(current(m(RAT), isoRefRgdId), "u5current"))
+      }
 
-    // Materialization discipline, measured not guessed: each species'
-    // logical plan nests the previous one's, so with plain cache() every
-    // downstream action re-paid Catalyst analysis + canonicalization over
-    // the k-times-nested annotate spine even though execution read the
-    // cache — the multi-species harness row ran ~71s warm at BOTH sf0.01
-    // and sf0.1 (pure plan cost, zero data dependence). Snapshot
-    // .materialize truncates the plan to a LogicalRDD leaf per species
-    // (warm wall fell >4x) and hands back the storage handle, so each
-    // iteration releases the previous species' blocks deterministically —
-    // no table-sized storage accumulates across harness invocations.
-
-    var table = existing
-    var prevRelease: Option[() => Unit] = None
-    // forward-looking values observed during the previous species' fill;
-    // None whenever that fill's table was changed afterwards (stale
-    // delete fired) or no fill ran yet
-    var initialCarry: Option[Long] = Some(firstInitial)
-    var maxKeyCarry: Option[Long] = Some(firstMaxKey)
-    var u5Carry: Option[(Long, Long)] = None // (stale, current) for U5
+    var release: () => Unit = () => ()
     // a failure anywhere mid-run must release the in-flight snapshots:
-    // harness callers catch Throwable and keep the session alive, so a
-    // stranded mergedSnap/species snapshot would pin table-sized blocks
-    // for the rest of the session (the deterministic-release contract
-    // the Snapped handles exist for)
+    // harness callers catch Throwable and keep the session alive
     try {
+      // time zero: U5's initial count plus what the first step reads
+      val (zero, zeroObs) = observed(existing,
+          Seq(RAT, forwardSpecies(runs.headOption))) { m =>
+        Seq(countIf(current(m(RAT), isoRefRgdId), "isoInitial"),
+          maxKeyAgg.as("maxKey")) ++ forward(runs.headOption, m)
+      }
+      zero.count()
+      var carry = zeroObs.get
+      val isoInitial = long(carry, "isoInitial")
+      var table = existing
+      val opNames = Seq("insert", "update", "touch", "keep")
+
       val perSpecies = runs.zipWithIndex.map { case (r, i) =>
-        val initial = initialCarry.getOrElse(
-          refSpeciesCount(table, dims.rgdIds, r.cfg.refRgdId,
-            r.cfg.speciesTypeKey))
-        val nextOpt = runs.lift(i + 1)
-        val isLast = i == runs.size - 1
-        val needsScope = r.cfg.refRgdId != 0
-        // materialize the merge ONCE: every count this iteration (and
-        // the next one's initial, and U5's on the last species) rides
-        // the SAME fill pass as observed aggregates over broadcast
-        // scope markers — the full-outer join never re-executes and the
-        // stored result is re-read only by the delete anti-joins.
-        val mergeFrame = AnnotationPipeline.run(r.gaf, table, dims, r.cfg,
-          maxKeyOpt = maxKeyCarry)
-        // one marker per DISTINCT species scope this fill must count
-        val marks = scala.collection.mutable.LinkedHashMap.empty[Int, String]
-        def marker(speciesTypeKey: Int): String =
-          marks.getOrElseUpdate(speciesTypeKey, s"_m_${marks.size}")
-        val scM = if (needsScope) Some(marker(r.cfg.speciesTypeKey)) else None
-        val nxM = nextOpt.map(n => marker(n.cfg.speciesTypeKey))
-        val u5M = if (isLast) Some(marker(RAT)) else None
-        val obs = org.apache.spark.sql.Observation()
-        val metrics: Seq[Column] =
-          Seq("insert", "update", "touch", "keep").map(o =>
-            count(when(col("_op") === o, 1)).as(s"op_$o")) ++
-          Seq(coalesce(max(col("full_annot_key")), lit(0L)).as("maxKey")) ++
-          scM.toSeq.flatMap(m => Seq(
-            count(when(staleCond(m, r.cfg.refRgdId, r.cfg.createdBy), 1))
-              .as("stale"),
-            count(when(scoped(m, r.cfg.refRgdId), 1)).as("current"))) ++
-          nxM.zip(nextOpt).map { case (m, n) =>
-            count(when(scoped(m, n.cfg.refRgdId), 1)).as("nextInitial") } ++
-          u5M.toSeq.flatMap(m => Seq(
-            count(when(staleCond(m, isoRefRgdId, u5CreatedBy), 1))
-              .as("u5stale"),
-            count(when(scoped(m, isoRefRgdId), 1)).as("u5current")))
-        val observed = marks.foldLeft(mergeFrame) { case (df, (sp, m)) =>
-          df.join(broadcast(scopeFrame(sp, m)),
-            col("annotated_object_rgd_id") === col(m), "left")
-        }.observe(obs, metrics.head, metrics.tail: _*)
-          .drop(marks.values.toSeq: _*)
-        val mergedSnap = Snapshot.materialize(observed)
-        var mergedAdopted = false // did mergedSnap become `table`'s storage?
+        val next = runs.lift(i + 1)
+        val own = Option.when(r.cfg.refRgdId != 0)(r.cfg.speciesTypeKey)
+        val merged = AnnotationPipeline.run(r.gaf, table, dims, r.cfg,
+          maxKey = long(carry, "maxKey"))
+        val (mergedSnap, row) = fill(merged, own.toSeq :+ forwardSpecies(next)) { m =>
+          opNames.map(o => countIf(col("_op") === o, s"op_$o")) ++
+            Seq(maxKeyAgg.as("maxKey")) ++
+            own.toSeq.flatMap(sp => Seq(
+              countIf(stale(m(sp), r.cfg.refRgdId, staleCutoff,
+                r.cfg.createdBy), "stale"),
+              countIf(current(m(sp), r.cfg.refRgdId), "current"))) ++
+            forward(next, m)
+        }
+        var mergedAdopted = false
         try {
-          val row = obs.get
-          val ops = Seq("insert", "update", "touch", "keep")
-            .map(o => o -> row(s"op_$o").asInstanceOf[Long])
-            .filter(_._2 > 0).toMap
-          val next = mergedSnap.df.drop("_op")
+          val ops = opNames.map(o => o -> long(row, s"op_$o")).filter(_._2 > 0).toMap
+          val kept = mergedSnap.df.drop("_op")
           val (afterDelete, report) =
-            if (!needsScope)
-              (next, StaleReport(0, 0, aborted = false))
-            else MergeSink.staleDeleteCounted(next, dims.rgdIds,
+            if (own.isEmpty) (kept, StaleReport(0, 0, aborted = false))
+            else MergeSink.staleDeleteCounted(kept, dims.rgdIds,
               r.cfg.refRgdId, r.cfg.speciesTypeKey, staleCutoff,
-              r.cfg.createdBy, thresholdPct, initial,
-              row("stale").asInstanceOf[Long],
-              row("current").asInstanceOf[Long])
-          if (afterDelete eq next) {
-            // no rows removed: the stored merge IS the table (a column
-            // projection over its leaf — no second materialization),
-            // and every forward-looking observed value is valid
-            prevRelease.foreach(_())
-            prevRelease = Some(mergedSnap.release)
-            mergedAdopted = true
-            table = next
-            initialCarry = nextOpt.map(_ => row("nextInitial").asInstanceOf[Long])
-            maxKeyCarry = Some(row("maxKey").asInstanceOf[Long])
-            u5Carry = if (isLast)
-              Some((row("u5stale").asInstanceOf[Long],
-                row("u5current").asInstanceOf[Long]))
-            else None
-          } else {
-            // delete fired: materialize the survivors and drop every
-            // carried value measured over the pre-delete rows
-            val snap = Snapshot.materialize(afterDelete)
-            prevRelease.foreach(_())
-            prevRelease = Some(snap.release)
-            table = snap.df
-            initialCarry = None
-            maxKeyCarry = None
-            u5Carry = None
-          }
+              r.cfg.createdBy, thresholdPct, long(carry, "nextInitial"),
+              long(row, "stale"), long(row, "current"))
+          val (nextTable, nextRelease, values) =
+            if (afterDelete eq kept) {
+              mergedAdopted = true
+              (kept, mergedSnap.release, row)
+            } else {
+              val (snap, values) = fill(afterDelete, Seq(forwardSpecies(next))) { m =>
+                maxKeyAgg.as("maxKey") +: forward(next, m)
+              }
+              (snap.df, snap.release, values)
+            }
+          release()
+          release = nextRelease
+          table = nextTable
+          carry = values
           (r.name, ops, report)
         } finally if (!mergedAdopted) mergedSnap.release()
       }
 
-      // U5: rat-ISO stale delete vs the time-zero snapshot. The scoped
-      // counts come from the last species' fill observation when its
-      // table survived unchanged; otherwise count the table directly.
-      val (afterIso, isoReport) = u5Carry match {
-        case Some((u5Stale, u5Current)) =>
-          MergeSink.staleDeleteCounted(table, dims.rgdIds, isoRefRgdId,
-            RAT, staleCutoff, u5CreatedBy, thresholdPct, isoInitial,
-            u5Stale, u5Current)
-        case None =>
-          MergeSink.staleDelete(table, dims.rgdIds, isoRefRgdId, RAT,
-            staleCutoff, u5CreatedBy, thresholdPct, isoInitial)
-      }
-
-      // finalTable: a NARROW plan (column projection, plus the U5
-      // anti-join when it fired) over the run's one pinned
-      // materialization, whose release handle rides the report. It is
-      // deliberately NOT re-materialized (r16): the former final_fill
-      // copied the whole table into storage a second time so callers
-      // could act on a single leaf, but every action on the returned
-      // frame only re-pays a broadcast anti-join over the stored leaf —
-      // callers wanting a leaf (e.g. before releasing) materialize or
-      // localCheckpoint the projection themselves, which they did
-      // anyway (gaf_runner_multispecies does exactly that).
-      RunReport(perSpecies, Some(isoReport), afterIso,
-        prevRelease.getOrElse(() => ()))
+      val (afterIso, isoReport) = MergeSink.staleDeleteCounted(table,
+        dims.rgdIds, isoRefRgdId, RAT, staleCutoff, u5CreatedBy, thresholdPct,
+        isoInitial, long(carry, "u5stale"), long(carry, "u5current"))
+      RunReport(perSpecies, Some(isoReport), afterIso, release)
     } catch { case e: Throwable =>
-      prevRelease.foreach(_())
+      release()
       throw e
     }
   }

@@ -47,10 +47,14 @@ object Audit {
       .join(broadcast(AnnotationPipeline.catalyticTerms(dims)),
         Seq("go_id"), "left_semi")
 
-  /** unmatched.log — source lines that matched no active gene. */
+  /** unmatched.log — source lines that matched no ACTIVE gene of any
+    * species (MAHQC.java:81-84 tests species after the unmatched test),
+    * the same test as the A7 `unmatchedCounter`.
+    */
   def unmatched(gaf: DataFrame, dims: Dimensions, fileSpecies: Int): DataFrame = {
     val filtered = AnnotationPipeline.qcTermFilters(gaf, dims)
-    val matched = AnnotationPipeline.matchGenes(filtered, dims, fileSpecies)
+    val matched = AnnotationPipeline.matchGenes(filtered, dims, fileSpecies,
+        Some(AnnotationPipeline.resolveGeneIds(dims, -1)))
       .select(col("db"), col("db_object_id")).distinct()
     filtered.join(matched, Seq("db", "db_object_id"), "left_anti")
   }
@@ -103,15 +107,6 @@ object Audit {
     */
   def opRows(merged: DataFrame, op: String): DataFrame =
     merged.filter(col("_op") === op)
-
-  /** delete.log — the stale rows a U4 pass would remove (same predicate
-    * as [[MergeSink.staleDelete]], exposed as a row list).
-    */
-  def deleteCandidates(table: DataFrame, rgdIds: DataFrame, refRgdId: Int,
-                       speciesTypeKey: Int, cutoff: java.sql.Timestamp,
-                       createdBy: Int): DataFrame =
-    MergeSink.staleCandidates(table, rgdIds, refRgdId, speciesTypeKey,
-      cutoff, createdBy)
 
   /** fileDownload.log — one row per ingest attempt. */
   def fileDownloadLog(spark: org.apache.spark.sql.SparkSession,
@@ -185,9 +180,9 @@ object Audit {
     // rounds) — run them concurrently (round 8; they were ~3.3s
     // sequential at sf0.1, ~1.8s overlapped)
     val catalyticF = Future(AnnotationPipeline.catalyticTerms(dims))
-    // ONE redirect-fixpoint walk feeds both resolve variants (main
-    // species-scoped + the unmatched counter's any-species), halving the
-    // chain-depth precomputation collects
+    // ONE memoized redirect-fixpoint walk feeds both resolve variants
+    // (main species-scoped + the unmatched counter's any-species),
+    // halving the chain-depth precomputation collects
     val fixF = Future(resolveFixpoint(dims))
     val catalytic = Await.result(catalyticF, Duration.Inf)
     val f4Hit = col("_n4c").isNotNull
@@ -217,14 +212,9 @@ object Audit {
     // the chain — or that action's accumulator would double-count; the
     // staging exchanges below enforce this.
 
-    val fix = Await.result(fixF, Duration.Inf)
-    val mainResolve = fix
-      .filter(col("cur_status") === "ACTIVE" &&
-        col("cur_species") === lit(cfg.speciesTypeKey))
-      .select(col("raw_rgd_id"), col("cur_id").as("final_rgd_id"))
-    val anyResolve = fix
-      .filter(col("cur_status") === "ACTIVE")
-      .select(col("raw_rgd_id"), col("cur_id").as("final_rgd_id"))
+    Await.result(fixF, Duration.Inf) // both resolves read its memo
+    val mainResolve = resolveGeneIds(dims, cfg.speciesTypeKey)
+    val anyResolve = resolveGeneIds(dims, -1)
 
     // noRatGene (MAHQC.java:195-200) as a broadcast ortholog-id marker
     // on the matched spine — replaces the former anti-join side job

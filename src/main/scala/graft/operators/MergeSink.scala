@@ -54,33 +54,33 @@ object MergeSink {
     * `incoming` must carry every `existing` column except
     * `full_annot_key`, `created_date`, `last_modified_date`,
     * `created_by`, `last_modified_by`.
-    */
-  /** @param assignKeys pass false ONLY for audit passes that never use
-    *                    insert rows' surrogate keys (insert keys stay
-    *                    NULL): skips the per-bucket row_number window
-    *                    sort AND the maxKey driver action. All persisted
-    *                    outputs must keep the default.
+    *
+    * @param assignKeys pass false ONLY for audit passes that never use
+    *                   insert rows' surrogate keys (insert keys stay
+    *                   NULL): skips the per-bucket row_number window
+    *                   sort AND the maxKey driver action. All persisted
+    *                   outputs must keep the default.
     */
   def merge(existing: DataFrame, incoming: DataFrame, runTs: Timestamp,
             createdBy: Int, assignKeys: Boolean = true): DataFrame =
     merge(existing, incoming, runTs, createdBy, assignKeys,
-      maxKeyOpt = None)
+      maxKey = if (assignKeys) existing.agg(maxKeyAgg).head().getLong(0) else 0L)
 
-  /** @param maxKeyOpt pre-computed `max(full_annot_key)` over `existing`
-    *                   (0 when empty). Callers that already paid an action
-    *                   on `existing` (e.g. [[graft.gaf.PipelineRunner]]'s
-    *                   fused fill observation) pass it here so the merge
-    *                   plan-build skips its own driver aggregation — the
-    *                   value MUST equal what that aggregation would read,
-    *                   or insert surrogate keys change. private[graft]
-    *                   (r17 advice): a wrong caller-supplied maxKey
-    *                   silently produces colliding surrogate keys, the
-    *                   appendKeys hazard class — the runner/pipeline are
-    *                   the only intended callers.
+  /** `max(full_annot_key)` of a table, 0 when it is empty: insert keys
+    * start above it.
+    */
+  private[graft] def maxKeyAgg: Column =
+    coalesce(max(col("full_annot_key")), lit(0L))
+
+  /** @param maxKey [[maxKeyAgg]] over `existing`, already read by the
+    *               caller ([[graft.gaf.PipelineRunner]] observes it over
+    *               the frame that becomes `existing`). It MUST equal that
+    *               aggregate, or insert surrogate keys collide —
+    *               private[graft] for that reason.
     */
   private[graft] def merge(existing: DataFrame, incoming: DataFrame,
             runTs: Timestamp, createdBy: Int, assignKeys: Boolean,
-            maxKeyOpt: Option[Long]): DataFrame = {
+            maxKey: Long): DataFrame = {
     val outCols = existing.columns.toSeq
     val e = existing.withColumn("_e", lit(1)).as("e")
     val i = incoming.withColumn("_i", lit(1)).as("i")
@@ -88,12 +88,6 @@ object MergeSink {
       uniqueKey.map(k => col(s"e.$k") <=> col(s"i.$k")).reduce(_ && _)
     val changed: Column =
       updatableCols.map(c => !(col(s"e.$c") <=> col(s"i.$c"))).reduce(_ || _)
-
-    val maxKey: Long =
-      if (!assignKeys) 0L
-      else maxKeyOpt.getOrElse(
-        existing.agg(coalesce(max(col("full_annot_key")), lit(0L)))
-          .head().getLong(0))
 
     val joined = e.join(i, cond, "full_outer")
       .withColumn("_op",
@@ -147,27 +141,55 @@ object MergeSink {
   final case class StaleReport(staleCount: Long, currentCount: Long,
                                aborted: Boolean)
 
-  /** The rows a U4 pass considers stale (also exposed as the delete.log
-    * audit side output). ACTIVE-object scope, matching both the jar count
-    * SQL (`r.object_status='ACTIVE' AND r.species_type_key=?`) and
-    * PipelineRunner.refSpeciesCount — the brake compares like scopes.
+  // ------------------------------------------------ the U4/U5 brake
+  // One scope and two predicates over it (DAO.java:86-88, 200-226): the
+  // brake's initial, current and stale counts and the delete itself all
+  // read them, so the brake always compares like scopes.
+
+  /** `table` with a `marker` column that is non-null exactly on rows
+    * whose annotated object is an ACTIVE object of `speciesTypeKey` (the
+    * jar's `r.object_status='ACTIVE' AND r.species_type_key=?`). The
+    * scope is distinct, so the left join never multiplies rows, and
+    * dim-sized, so it is broadcast.
+    */
+  private[graft] def scoped(table: DataFrame, rgdIds: DataFrame,
+                            speciesTypeKey: Int, marker: String): DataFrame =
+    table.join(
+      broadcast(rgdIds
+        .filter(col("species_type_key") === speciesTypeKey &&
+          col("object_status") === "ACTIVE")
+        .select(col("rgd_id").as(marker)).distinct()),
+      col("annotated_object_rgd_id") === col(marker), "left")
+
+  /** In-scope rows of reference `refRgdId` on a [[scoped]] frame: the
+    * brake's initial (A8) and current counts.
+    */
+  private[graft] def current(marker: String, refRgdId: Int): Column =
+    col("ref_rgd_id") === refRgdId && col(marker).isNotNull
+
+  /** [[current]] rows this pipeline wrote and the run left untouched:
+    * U4's delete candidates.
+    */
+  private[graft] def stale(marker: String, refRgdId: Int, cutoff: Timestamp,
+                           createdBy: Int): Column =
+    current(marker, refRgdId) && col("created_by") === createdBy &&
+      col("last_modified_date") < lit(cutoff)
+
+  private val Marker = "_brake_scope"
+
+  /** The rows a U4 pass considers stale (the delete.log audit side
+    * output).
     */
   def staleCandidates(table: DataFrame, rgdIds: DataFrame, refRgdId: Int,
                       speciesTypeKey: Int, cutoff: Timestamp,
-                      createdBy: Int): DataFrame = {
-    val scopeIds = broadcast(
-      rgdIds.filter(col("species_type_key") === speciesTypeKey &&
-          col("object_status") === "ACTIVE")
-        .select(col("rgd_id")))
-    table
-      .filter(col("created_by") === createdBy &&
-        col("last_modified_date") < lit(cutoff) &&
-        col("ref_rgd_id") === refRgdId)
-      .join(scopeIds, col("annotated_object_rgd_id") === col("rgd_id"), "left_semi")
-  }
+                      createdBy: Int): DataFrame =
+    scoped(table, rgdIds, speciesTypeKey, Marker)
+      .filter(stale(Marker, refRgdId, cutoff, createdBy))
+      .drop(Marker)
 
   /** U4/U5 — stale-annotation delete with the net-drop threshold brake
-    * (DAO.java:200-226; net-drop semantics per changes.txt:93-95).
+    * (DAO.java:200-226; net-drop semantics per changes.txt:93-95). Reads
+    * the stale and current counts in one job.
     *
     * @param initialCount  count for (ref, species) snapshot taken before
     *                      the run (A8)
@@ -177,29 +199,19 @@ object MergeSink {
                   speciesTypeKey: Int, cutoff: Timestamp, createdBy: Int,
                   thresholdPct: Double, initialCount: Long)
       : (DataFrame, StaleReport) = {
-    val scopeIds = broadcast(
-      rgdIds.filter(col("species_type_key") === speciesTypeKey &&
-          col("object_status") === "ACTIVE")
-        .select(col("rgd_id")))
-    val stale = staleCandidates(table, rgdIds, refRgdId, speciesTypeKey,
-      cutoff, createdBy)
-
-    val staleCount = stale.count()
-    val currentCount = table
-      .filter(col("ref_rgd_id") === refRgdId)
-      .join(scopeIds, col("annotated_object_rgd_id") === col("rgd_id"), "left_semi")
-      .count()
-
+    val counts = scoped(table, rgdIds, speciesTypeKey, Marker).agg(
+      count(when(stale(Marker, refRgdId, cutoff, createdBy), 1)),
+      count(when(current(Marker, refRgdId), 1))).head()
     staleDeleteCounted(table, rgdIds, refRgdId, speciesTypeKey, cutoff,
-      createdBy, thresholdPct, initialCount, staleCount, currentCount)
+      createdBy, thresholdPct, initialCount, counts.getLong(0),
+      counts.getLong(1))
   }
 
-  /** [[staleDelete]] with the two scoped counts already in hand (e.g.
-    * observed map-side during the merge fill — PipelineRunner's fused
-    * fill): same brake decision and same anti-join, zero count actions.
-    * The counts MUST have been measured over exactly `table`'s rows —
-    * private[graft] (r17 advice) so no outside caller can feed counts
-    * that desynchronize the threshold brake (the appendKeys precedent).
+  /** [[staleDelete]] with the two scoped counts already in hand (observed
+    * by PipelineRunner over the frame that is `table`). The counts MUST
+    * have been measured over exactly `table`'s rows — private[graft] so
+    * no outside caller can feed counts that desynchronize the brake.
+    * Returns `table` itself when nothing is deleted.
     */
   private[graft] def staleDeleteCounted(table: DataFrame, rgdIds: DataFrame, refRgdId: Int,
                          speciesTypeKey: Int, cutoff: Timestamp,
@@ -209,13 +221,10 @@ object MergeSink {
     val netDrop = initialCount - (currentCount - staleCount)
     val abort = currentCount > 0 &&
       netDrop > currentCount * thresholdPct / 100.0
-    if (abort || staleCount == 0) (table, StaleReport(staleCount, currentCount, abort))
-    else {
-      val stale = staleCandidates(table, rgdIds, refRgdId, speciesTypeKey,
-        cutoff, createdBy)
-      val kept = table.join(stale.select("full_annot_key"),
-        Seq("full_annot_key"), "left_anti")
-      (kept, StaleReport(staleCount, currentCount, aborted = false))
-    }
+    val report = StaleReport(staleCount, currentCount, abort)
+    if (abort || staleCount == 0) (table, report)
+    else (scoped(table, rgdIds, speciesTypeKey, Marker)
+      .filter(!coalesce(stale(Marker, refRgdId, cutoff, createdBy), lit(false)))
+      .drop(Marker), report)
   }
 }

@@ -162,6 +162,23 @@ class OpsSpec extends SparkSpec {
       "MATCH BY MGI" -> 5L))                         // 5 matched (line,gene) pairs
   }
 
+  test("unmatched.log and unmatchedCounter agree on another species' gene") {
+    // P12345 is fixture gene 1005, an ACTIVE human gene: a mouse run
+    // counts the line as matched (the reference tests species AFTER the
+    // unmatched test) and drops it later for its species
+    val line = Seq("UniProtKB", "P12345", "BRCA2", "", "GO:0001", "PMID:1",
+      "IDA", "", "F", "name", "", "protein", "taxon:10090", "20240409",
+      "UniProt", "", "").mkString("\t")
+    val one = graft.sources.GafReader.fromLines(Seq(line).toDF("value"))
+    val cfg = graft.gaf.Fixtures.mouseConfig(
+      java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
+    assert(Audit.unmatched(one, dims, cfg.speciesTypeKey).count() === 0)
+    val counters = Audit.pipelineCounters(one, dims, cfg,
+        graft.gaf.Fixtures.emptyFullAnnot(spark))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(counters("unmatchedCounter") === 0L)
+  }
+
   test("linesRemoved agg form equals the r8 window form on crafted cases") {
     // r9 replaced the whole-partition-window keeper computation with
     // two hash aggregations; the sf0.01 pins all read 0 for this

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.gaf.Constants._
+import graft.operators.MergeSink
+import graft.operators.MergeSink.StaleReport
 
 class RunnerSpec extends SparkSpec {
 
@@ -152,16 +154,13 @@ class RunnerSpec extends SparkSpec {
     assert(leaked.isEmpty, s"runAll leaked persistent RDDs: $leaked")
   }
 
-  test("fused-fill fallback: a mid-run species stale delete invalidates " +
-      "the carried counts and the run still lands correct (r16)") {
-    // r16 fuses the next species' initial count, the next merge's max
-    // key and the U5 counts into each species' fill observation — valid
-    // only while the species' own stale delete is a no-op. Seed a stale
-    // MOUSE-scoped pipeline row so mouse's delete FIRES mid-run: the
-    // carried values are measured over pre-delete rows and must be
-    // discarded (recomputed over the survivors), or U5/next-initial
-    // decisions drift. Assertions pin both the per-species delete and
-    // the downstream correctness of everything the carry feeds.
+  test("a mid-run species stale delete: later steps read the survivors " +
+      "and the run still lands correct") {
+    // Seed a stale MOUSE-scoped pipeline row so mouse's delete FIRES
+    // mid-run: the next species' initial count, the next merge's max key
+    // and U5's counts must be observed over the survivors, not over the
+    // pre-delete merge. Assertions pin both the per-species delete and
+    // the downstream correctness of everything those values feed.
     val dims = Fixtures.dims(spark)
     val runTs = ts("2026-01-02 00:00:00")
     val cutoff = ts("2026-01-01 23:50:00")
@@ -189,19 +188,105 @@ class RunnerSpec extends SparkSpec {
       assert(!mouseReport.aborted && mouseReport.staleCount === 1)
       assert(report.finalTable.filter(col("full_annot_key") === 2)
         .count() === 0)
-      // U5 still fired on the stale ISO row (its counts were recomputed
-      // over the post-delete table, not served from the carry)
+      // U5 still fired on the stale ISO row (its counts observed over
+      // the post-delete table)
       assert(report.isoStale.exists(r => !r.aborted && r.staleCount === 1))
       assert(report.finalTable.filter(col("full_annot_key") === 3)
         .count() === 0)
-      // surrogate keys downstream of the invalidated maxKey carry stay
-      // collision-free and above the existing key space
+      // surrogate keys assigned after the delete stay collision-free
       val keys = report.finalTable.select("full_annot_key")
         .collect().map(_.getLong(0))
       assert(keys.distinct.length === keys.length)
       assert(report.finalTable.filter(col("annotated_object_rgd_id") === 1008)
-        .count() === 1) // chin-derived ISO landed after the fallback
+        .count() === 1) // chin-derived ISO landed after the delete
     } finally report.release()
+  }
+
+  /** runAll replayed one species at a time through the public calls:
+    * refSpeciesCount, AnnotationPipeline.run, MergeSink.staleDelete, then
+    * a U5 staleDelete against the time-zero count. Each merge is
+    * checkpointed only so the next species' plan stays small.
+    */
+  private def replay(existing: DataFrame, dims: Dimensions,
+                     runs: Seq[PipelineRunner.SpeciesRun], cutoff: Timestamp)
+      : (Seq[(String, Map[String, Long], StaleReport)], StaleReport, DataFrame) = {
+    val isoInitial = PipelineRunner.refSpeciesCount(existing, dims.rgdIds,
+      REF_ISO, RAT)
+    var table = existing
+    val species = runs.map { r =>
+      val initial = PipelineRunner.refSpeciesCount(table, dims.rgdIds,
+        r.cfg.refRgdId, r.cfg.speciesTypeKey)
+      val merged = AnnotationPipeline.run(r.gaf, table, dims, r.cfg)
+        .localCheckpoint()
+      val ops = merged.groupBy("_op").count().collect()
+        .map(x => x.getString(0) -> x.getLong(1)).toMap
+      val (after, report) = MergeSink.staleDelete(merged.drop("_op"),
+        dims.rgdIds, r.cfg.refRgdId, r.cfg.speciesTypeKey, cutoff,
+        r.cfg.createdBy, DELETE_THRESHOLD_PCT, initial)
+      table = after
+      (r.name, ops, report)
+    }
+    val (finalTable, isoReport) = MergeSink.staleDelete(table, dims.rgdIds,
+      REF_ISO, RAT, cutoff, CREATED_BY, DELETE_THRESHOLD_PCT, isoInitial)
+    (species, isoReport, finalTable)
+  }
+
+  test("runAll equals a species-at-a-time replay through the public calls") {
+    val dims = Fixtures.dims(spark)
+    val runTs = ts("2026-01-02 00:00:00")
+    val cutoff = ts("2026-01-01 23:50:00")
+    val oldTs = ts("2025-06-01 00:00:00")
+    val mouseCfg = Fixtures.mouseConfig(runTs)
+    val chinManual = annotRow(1, "GO:0001", "term one", 1007, "IDA", 555, 100,
+      oldTs, symbol = "Chin1")
+    val staleIso = annotRow(3, "GO:0002", "term two", 1006, "ISO", REF_ISO,
+      CREATED_BY, oldTs, withInfo = "RGD:9999")
+    val staleMouse = (k: Long, term: String) => annotRow(k, term, "t", 1004,
+      "IMP", mouseCfg.refRgdId, CREATED_BY, oldTs)
+    def runs(existing: DataFrame) = Seq(
+      PipelineRunner.SpeciesRun("mouse", Fixtures.mouseGaf(spark), mouseCfg),
+      PipelineRunner.chinchillaRun(existing, dims, REF_ISO, runTs))
+
+    val fullRun = table(chinManual, staleIso)
+    val midRunDelete = table(chinManual, staleMouse(2, "GO:0002"), staleIso)
+    // five stale mouse rows against three mouse inserts: net drop 2 rows
+    // of 8 current, over the 10% brake
+    val brakeTrip = table(chinManual +:
+      (10 to 14).map(k => staleMouse(k, s"GO:00$k")): _*)
+    // U5 alone: one stale ISO row among 13 current, under the brake
+    val u5Only = table(staleIso +: (20 to 31).map(k => annotRow(k,
+      s"GO:00$k", "t", 1006, "ISO", REF_ISO, CREATED_BY, runTs,
+      withInfo = "RGD:1005")): _*)
+    val cases = Seq("full run" -> (fullRun, runs(fullRun)),
+      "mid-run delete" -> (midRunDelete, runs(midRunDelete)),
+      "brake trip" -> (brakeTrip, runs(brakeTrip)),
+      "no species" -> (u5Only, Seq.empty))
+
+    for ((name, (existing, speciesRuns)) <- cases) {
+      val report = PipelineRunner.runAll(existing, dims, speciesRuns,
+        REF_ISO, cutoff)
+      try {
+        val (species, isoReport, replayed) =
+          replay(existing, dims, speciesRuns, cutoff)
+        assert(report.species === species, name)
+        assert(report.isoStale === Some(isoReport), name)
+        val got = report.finalTable.select(existing.columns.map(col): _*)
+        val want = replayed.select(existing.columns.map(col): _*)
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+          s"$name: final tables differ")
+        name match {
+          case "brake trip" =>
+            assert(species.head._3.aborted)
+            assert(got.filter(col("full_annot_key").between(10, 14))
+              .count() === 5)
+          case "no species" =>
+            assert(species.isEmpty)
+            assert(isoReport === StaleReport(1, 13, aborted = false))
+            assert(got.count() === 12)
+          case _ =>
+        }
+      } finally report.release()
+    }
   }
 
   test("a failing species fill surfaces its error and releases every snapshot") {
