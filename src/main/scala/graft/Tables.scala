@@ -67,28 +67,11 @@ object Tables {
     else df
   }
 
-  /** Collapse a DIM-SIZED frame to a LOCAL relation when it fits the
-    * driver (r17): plans that embed derived dimension subtrees at many
-    * places (the annotate spine joins dims ~10 times, three species per
-    * runner pass) re-pay Catalyst analysis and broadcast-build jobs per
-    * embedding; a LocalRelation leaf is free to analyze and broadcasts
-    * without a job. Content identical. Past `cap` rows the lazy plan is
-    * returned unchanged — the same adaptive split DagClosure and the
-    * resolve fixpoint use. Only for dimension tables: a fact frame
-    * localized here would ship the corpus through the driver.
-    */
-  def localizeBounded(df: DataFrame, cap: Int = 1000000): DataFrame = {
-    val rows = limitCollect(df, cap + 1)
-    if (rows.length > cap) df
-    else df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
-  }
-
   /** `df.limit(n).collect()` as ONE full-parallelism job. Plain
     * limit+collect runs CollectLimitExec's incremental partition probing
     * (1, then 4x, ...) — several sequential rounds when the limit is a
     * driver-size CAP that the whole input fits under, which is the
-    * adaptive-collect pattern (DagClosure, resolveGeneIds). Scoped conf
+    * adaptive-collect pattern (DagClosure, the J6 walk). Scoped conf
     * override, restored after the job.
     */
   def limitCollect(df: DataFrame, n: Int): Array[org.apache.spark.sql.Row] = {

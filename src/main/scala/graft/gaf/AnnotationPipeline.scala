@@ -1,9 +1,9 @@
 package graft.gaf
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.gaf.Constants._
 import graft.operators.{AnnotMerge, Consolidator, MergeSink}
 import graft.plans.DagClosure
@@ -89,20 +89,15 @@ object AnnotationPipeline {
         lit(CATALYTIC_ACTIVITY))
       .select(col("descendant").as("go_id"))
       .union(dims.ontDag.sparkSession.createDataFrame(
-        java.util.List.of[org.apache.spark.sql.Row](
-          org.apache.spark.sql.Row(CATALYTIC_ACTIVITY)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("go_id",
-            org.apache.spark.sql.types.StringType)))))
+        java.util.List.of(Row(CATALYTIC_ACTIVITY)),
+        StructType(Seq(StructField("go_id", StringType)))))
 
   // ---------------------------------------------------------------- J6
   /** Raw gene id -> final ACTIVE file-species gene id, as a dim-sized
     * lookup (status validation + MULTI-HOP history redirect,
     * MAHQC.java:169-193; the jar's getActiveRgdIdFromHistory is a
-    * recursive CONNECT BY — followed here to a fixpoint). Runs entirely
-    * on dimension tables (the fact never sees status/history joins), so
-    * the per-hop driver loop costs one tiny action per hop — the same
-    * adaptive pattern as [[graft.plans.DagClosure]].
+    * recursive CONNECT BY — followed here to a fixpoint). A filter of
+    * [[resolveFixpoint]], so the fact never sees status/history joins.
     *
     * Ids that resolve to nothing (retired with no redirect, redirect
     * chain dead-ends, wrong species) are simply absent from the map.
@@ -116,16 +111,18 @@ object AnnotationPipeline {
         (lit(fileSpecies) < 0 || col("cur_species") === lit(fileSpecies)))
       .select(col("raw_rgd_id"), col("cur_id").as("final_rgd_id"))
 
-  /** The species-agnostic redirect fixpoint behind [[resolveGeneIds]]:
-    * (raw_rgd_id, cur_id, cur_status, cur_species) after following
-    * history to convergence. Exposed so audit paths that need several
-    * species filterings of the SAME walk (main + any-species) pay the
-    * chain-depth precomputation once.
+  /** The species-agnostic redirect fixpoint behind [[resolveGeneIds]] and
+    * the audit resolve variants: one row per gene id that can appear as
+    * a raw match (known genes plus retired ids that exist only as history
+    * sources) with the columns of [[fixpointColumns]]. The walk starts on
+    * the raw id's own status and advances to the id's `max(new_rgd_id)`
+    * redirect while the current status is not ACTIVE (a missing status
+    * counts as not ACTIVE). An id with several gene status rows starts
+    * one walk per row, and a hop onto such an id forks per row.
     *
     * Memoized per (rgdIds, history, maxHops) in a [[graft.SessionMemo]]
-    * (dims are themselves memoized per (session, dir) by callers): the
-    * depth precompute collects the dims once per DISTINCT dim set instead
-    * of once per matchGenes call.
+    * (dims are themselves memoized per (session, dir) by callers), so the
+    * walk's collect runs once per DISTINCT dim set.
     */
   private val fixpointCache =
     new graft.SessionMemo[(DataFrame, DataFrame, Int), DataFrame]()(
@@ -133,122 +130,112 @@ object AnnotationPipeline {
 
   def resolveFixpoint(dims: Dimensions, maxHops: Int = 20): DataFrame =
     fixpointCache((dims.rgdIds, dims.history, maxHops))(
-      localizeBounded(buildFixpoint(dims, maxHops)))
+      walkFixpoint(dims, maxHops).getOrElse(probeFixpoint(dims, maxHops)))
 
-  /** Collapse a DIM-SIZED plan to a LOCAL relation when it fits the
-    * driver (r17, guide §1.2 "per-task work" / §2.4): the fixpoint walk
-    * composes `depth` chained broadcast joins, and every consumer —
-    * matchGenes embeds the resolve map in several tier builds, times
-    * three species per runner pass — re-planned and re-EXECUTED that
-    * chain to build its broadcast. The walk's result is a genome
-    * dimension (one row per known gene id), already driver-bounded by
-    * construction everywhere it is broadcast, so one collect per
-    * (session, dims) turns every downstream broadcast build into a
-    * job-free local-relation read. Content identical; past the cap the
-    * lazy plan is returned unchanged (the same adaptive split the walk
-    * itself uses).
+  private val fixpointColumns =
+    Seq("raw_rgd_id", "raw_status", "cur_id", "cur_status", "cur_species")
+
+  /** Above this many gene status plus redirect rows, [[walkFixpoint]]
+    * leaves the fixpoint to [[probeFixpoint]] on the executors.
     */
-  private def localizeBounded(df: DataFrame,
-                              cap: Int = 1000000): DataFrame =
-    graft.Tables.localizeBounded(df, cap)
+  private val walkCap = 2000000
 
-  private def buildFixpoint(dims: Dimensions, maxHops: Int): DataFrame = {
-    val status = dims.rgdIds.filter(col("object_key") === GENES_OBJECT_KEY)
+  private def geneStatus(dims: Dimensions): DataFrame =
+    dims.rgdIds.filter(col("object_key") === GENES_OBJECT_KEY)
       .select(col("rgd_id"), col("object_status"), col("species_type_key"))
-    val histMax = dims.history.groupBy(col("old_rgd_id"))
+
+  private def redirects(dims: Dimensions): DataFrame =
+    dims.history.groupBy(col("old_rgd_id"))
       .agg(max(col("new_rgd_id")).as("redir_rgd_id"))
-    val statusOf = status.select(col("rgd_id").as("cur_id"),
-      col("object_status").as("cur_status"),
-      col("species_type_key").as("cur_species"))
 
-    // domain: any id that can appear as a raw match — known genes plus
-    // retired ids that exist only as history sources
-    val domain = status.select(col("rgd_id"))
-      .unionByName(dims.history.select(col("old_rgd_id").as("rgd_id")))
-      .distinct()
-    var cur = domain.select(col("rgd_id").as("raw_rgd_id"))
-      .join(broadcast(statusOf), col("raw_rgd_id") === col("cur_id"), "left")
-      .withColumn("cur_id", coalesce(col("cur_id"), col("raw_rgd_id")))
+  private def notConverged(maxHops: Int) = new IllegalStateException(
+    s"gene history redirect chain did not converge after $maxHops hops " +
+      "(cycle in the history table?)")
 
-    def step(df: DataFrame): DataFrame = df
+  /** The fixpoint as a local relation, the same collect-then-walk shape
+    * as [[graft.plans.DagClosure]]: ONE capped collect of the gene status
+    * rows and the redirect map (one union, each id column in its own
+    * type), a walk per domain id on the driver, and a job-free local
+    * relation every consumer broadcasts. None when the inputs exceed
+    * [[walkCap]].
+    */
+  private[gaf] def walkFixpoint(dims: Dimensions,
+                                maxHops: Int): Option[DataFrame] = {
+    // columns: rgd_id, object_status, species_type_key on status rows;
+    // old_rgd_id, redir_rgd_id on redirect rows; null on the other side
+    val both = geneStatus(dims)
+      .unionByName(redirects(dims), allowMissingColumns = true)
+    val rows = graft.Tables.limitCollect(both, walkCap + 1)
+    Option.when(rows.length <= walkCap) {
+      // null ids match nothing, as in a join: they key neither map
+      val statusOf = rows.filter(!_.isNullAt(0))
+        .groupMap(_.get(0))(r => (r.getString(1), r.get(2)))
+      val redirect = rows.filter(r => !r.isNullAt(3) && !r.isNullAt(4))
+        .map(r => r.get(3) -> r.get(4)).toMap
+      def states(k: Any): Seq[(String, Any)] =
+        statusOf.get(k).fold(Seq[(String, Any)]((null, null)))(_.toSeq)
+      def walk(k: Any, st: String, sp: Any, hops: Int): Seq[(Any, String, Any)] =
+        redirect.get(k) match {
+          case Some(next) if st != "ACTIVE" =>
+            if (hops == maxHops) throw notConverged(maxHops)
+            states(next).flatMap { case (s, p) => walk(next, s, p, hops + 1) }
+          case _ => Seq((k, st, sp))
+        }
+      // a status row carries its id in rgd_id, a redirect row in old_rgd_id
+      val domain = rows.map(r => if (r.isNullAt(0)) r.get(3) else r.get(0))
+        .distinct
+      val out = for {
+        raw <- domain.toSeq
+        (st, sp) <- states(raw)
+        (cur, curSt, curSp) <- walk(raw, st, sp, 0)
+      } yield Row(raw, st, cur, curSt, curSp)
+      both.sparkSession.createDataFrame(java.util.List.of(out: _*),
+        StructType(Seq(0, 1, 0, 1, 2).map(both.schema(_))))
+        .toDF(fixpointColumns: _*)
+    }
+  }
+
+  /** The fixpoint on the executors, for inputs over [[walkCap]]: one
+    * broadcast-join step per hop while a probe finds a row that still
+    * advances. Same rows as [[walkFixpoint]].
+    */
+  private[gaf] def probeFixpoint(dims: Dimensions, maxHops: Int): DataFrame = {
+    val status = geneStatus(dims).toDF("_id", "_st", "_sp")
+    val histMax = redirects(dims)
+
+    var cur = status.select("_id")
+      .union(dims.history.select("old_rgd_id")).distinct().toDF("raw_rgd_id")
+      .join(broadcast(status), col("raw_rgd_id") === col("_id"), "left")
+      .select(col("raw_rgd_id"), col("_st").as("raw_status"),
+        col("raw_rgd_id").as("cur_id"), col("_st").as("cur_status"),
+        col("_sp").as("cur_species"))
+
+    def advancing(df: DataFrame): DataFrame = df
       .join(broadcast(histMax), col("cur_id") === col("old_rgd_id"), "left")
       .withColumn("_adv", !(col("cur_status") <=> lit("ACTIVE")) &&
         col("redir_rgd_id").isNotNull)
-      .select(col("raw_rgd_id"),
+    // only an advancing row takes the status rows of its new id
+    def step(df: DataFrame): DataFrame = advancing(df)
+      .join(broadcast(status), col("_adv") && col("redir_rgd_id") === col("_id"),
+        "left")
+      .select(col("raw_rgd_id"), col("raw_status"),
         when(col("_adv"), col("redir_rgd_id")).otherwise(col("cur_id"))
-          .as("cur_id"))
-      .join(broadcast(statusOf), Seq("cur_id"), "left")
+          .as("cur_id"),
+        when(col("_adv"), col("_st")).otherwise(col("cur_status"))
+          .as("cur_status"),
+        when(col("_adv"), col("_sp")).otherwise(col("cur_species"))
+          .as("cur_species"))
 
-    // The redirect map and status set are genome-dimension tables, so the
-    // exact chain depth is computable driver-side in one pass each —
-    // the hop loop then composes exactly that many joins with ZERO
-    // per-hop driver actions (the previous shape ran one limit(1).count()
-    // job per hop on a lineage that grew per hop). Guarded by the same
-    // adaptive cap + distributed fallback pattern as DagClosure.
-    val cap = 1000000
-    // one tagged union = ONE collect job for both the redirect map and
-    // the active-id set (separate collects doubled the per-job cost
-    // dominating these dim-sized reads)
-    val snap = graft.Tables.limitCollect(
-      histMax.select(expr("try_cast(old_rgd_id as long)").as("a"),
-          expr("try_cast(redir_rgd_id as long)").as("b"), lit(0).as("t"),
-          col("redir_rgd_id").isNotNull.as("rn"))
-        .unionByName(status.filter(col("object_status") === "ACTIVE")
-          .select(expr("try_cast(rgd_id as long)").as("a"),
-            lit(null).cast("long").as("b"), lit(1).as("t"),
-            lit(false).as("rn"))),
-      2 * cap + 2)
-
-    // ids that don't cast to long (exotic id schemes, or genuinely null
-    // ids) would silently shrink the driver maps — the probing loop
-    // below handles any id type, so fall back to it. The redirect TARGET
-    // needs its own flag (`rn`, pre-cast non-null): a non-numeric
-    // redir_rgd_id try_casts to null and would vanish from the driver
-    // redirect map while step() still advances on it, underestimating
-    // chain depth and truncating chains WITHOUT the convergence error.
-    val idsNumeric = snap.forall(r =>
-      !r.isNullAt(0) && (!r.getBoolean(3) || !r.isNullAt(1)))
-
-    if (snap.length <= 2 * cap + 1 && idsNumeric) {
-      val active = snap.iterator.filter(_.getInt(2) == 1)
-        .map(_.getLong(0)).toSet
-      val redir = snap.iterator
-        .filter(r => r.getInt(2) == 0 && !r.isNullAt(1))
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // longest advancing chain over all possible starts: a chain's first
-      // step needs a redirect entry, so maxing over redirect sources is
-      // global. null/unknown status advances like the <=> in step().
-      val depth = redir.keysIterator.map { start =>
-        var cur = start
-        var hops = 0
-        while (hops <= maxHops && !active.contains(cur) && redir.contains(cur)) {
-          cur = redir(cur); hops += 1
-        }
-        hops
-      }.maxOption.getOrElse(0)
-      if (depth > maxHops)
-        throw new IllegalStateException(
-          s"gene history redirect chain did not converge after $maxHops hops " +
-            "(cycle in the history table?)")
-      for (_ <- 0 until depth) cur = step(cur)
-    } else {
-      // dims exceeded the driver cap (or non-numeric ids): probing loop
-      var hops = 0
-      var advancing = true
-      while (advancing && hops < maxHops) {
-        val probe = cur
-          .join(broadcast(histMax), col("cur_id") === col("old_rgd_id"), "left")
-          .withColumn("_adv", !(col("cur_status") <=> lit("ACTIVE")) &&
-            col("redir_rgd_id").isNotNull)
-        advancing = probe.filter(col("_adv")).limit(1).count() > 0
-        if (advancing) { cur = step(cur); hops += 1 }
+    var hops = 0
+    var advances = true
+    while (advances) {
+      advances = advancing(cur).filter(col("_adv")).limit(1).count() > 0
+      if (advances) {
+        if (hops == maxHops) throw notConverged(maxHops)
+        cur = step(cur); hops += 1
       }
-      if (advancing)
-        throw new IllegalStateException(
-          s"gene history redirect chain did not converge after $maxHops hops " +
-            "(cycle in the history table?)")
     }
-    cur
+    cur.select(fixpointColumns.map(col): _*)
   }
 
   // ------------------------------------------------------- J1..J6, F6, P3/P4/P10
@@ -304,8 +291,9 @@ object AnnotationPipeline {
     // the best-tier choice happen without shuffling the fact. An RGD
     // line's tier keys are all -1, so its tier probes find nothing.
     // `resolveOverride` swaps the (raw -> active file-species) dim for an
-    // audit variant (identity: raw matches; any-species: unmatched-line
-    // parity with MAHQC.java:81-84) — the plan shape is identical.
+    // audit variant (raw not-ACTIVE ids: Audit.inactive; any-species:
+    // unmatched-line parity with MAHQC.java:81-84) — the plan shape is
+    // identical.
     val resolve = resolveOverride.getOrElse(resolveGeneIds(dims, fileSpecies))
     // Broadcast size guard (mirrors Similarity.maxCentroids): the set dim
     // has at most one row per xdb accession row, so a bounded count of
@@ -537,8 +525,9 @@ object AnnotationPipeline {
       // J9: symbol/name enrichment (MAHQC.java:322-327)
       .join(broadcast(genes), Seq("annotated_object_rgd_id"))
       // P9: yyyyMMdd -> original_created_date (MAHQC.java:343-345)
+      // (an unparseable date leaves it null instead of failing the run)
       .withColumn("original_created_date",
-        to_timestamp(col("gaf_date"), "yyyyMMdd"))
+        try_to_timestamp(col("gaf_date"), lit("yyyyMMdd")))
       .drop("gaf_date", "_src_gene")
   }
 

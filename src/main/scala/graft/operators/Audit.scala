@@ -69,29 +69,20 @@ object Audit {
     gaf.filter(!col("evidence").isin(Constants.isoEvidenceCodes.toSeq: _*))
       .groupBy(col("evidence")).agg(count(lit(1)).as("cnt"))
 
-  // ------------------------------- audit resolve variants (J6 parity)
-  /** Identity resolve: every gene id maps to itself regardless of status
-    * or species — plugs into [[AnnotationPipeline.matchGenes]] to expose
-    * RAW candidate matches for the inactive.log path.
-    */
-  def identityResolve(dims: Dimensions): DataFrame =
-    dims.rgdIds.filter(col("object_key") === Constants.GENES_OBJECT_KEY)
-      .select(col("rgd_id").as("raw_rgd_id"), col("rgd_id").as("final_rgd_id"))
-
   /** inactive.log — (line, gene) pairs whose RAW candidate gene is not
     * ACTIVE (MAHQC.java:169-190 increments per non-active gene in the
     * candidate list, before the species check). Multi-hop redirect
     * targets still count their retired sources, like the reference.
+    * Matches with a resolve variant read off the J6 walk: the raw gene
+    * ids whose own status is not ACTIVE, each mapped to itself. Tier
+    * priority is still chosen on raw match presence, so a tier whose
+    * genes are all ACTIVE wins and yields no pair.
     */
-  def inactive(gaf: DataFrame, dims: Dimensions, fileSpecies: Int): DataFrame = {
-    val raw = AnnotationPipeline.matchGenes(gaf, dims, fileSpecies,
-      Some(identityResolve(dims)))
-    val notActive = dims.rgdIds
-      .filter(col("object_key") === Constants.GENES_OBJECT_KEY &&
-        col("object_status") =!= "ACTIVE")
-      .select(col("rgd_id"))
-    raw.join(broadcast(notActive), Seq("rgd_id"), "left_semi")
-  }
+  def inactive(gaf: DataFrame, dims: Dimensions, fileSpecies: Int): DataFrame =
+    AnnotationPipeline.matchGenes(gaf, dims, fileSpecies, Some(
+      AnnotationPipeline.resolveFixpoint(dims)
+        .filter(col("raw_status") =!= "ACTIVE")
+        .select(col("raw_rgd_id"), col("raw_rgd_id").as("final_rgd_id"))))
 
   /** noRatGene.log — (line, matched gene) pairs that are ISO-eligible but
     * have no rat ortholog (MAHQC.java:195-200).
@@ -180,9 +171,9 @@ object Audit {
     // rounds) — run them concurrently (round 8; they were ~3.3s
     // sequential at sf0.1, ~1.8s overlapped)
     val catalyticF = Future(AnnotationPipeline.catalyticTerms(dims))
-    // ONE memoized redirect-fixpoint walk feeds both resolve variants
-    // (main species-scoped + the unmatched counter's any-species),
-    // halving the chain-depth precomputation collects
+    // ONE memoized redirect-fixpoint walk feeds every resolve variant
+    // (main species-scoped, the unmatched counter's any-species and the
+    // inactive counter's raw not-ACTIVE ids)
     val fixF = Future(resolveFixpoint(dims))
     val catalytic = Await.result(catalyticF, Duration.Inf)
     val f4Hit = col("_n4c").isNotNull
@@ -212,8 +203,7 @@ object Audit {
     // the chain — or that action's accumulator would double-count; the
     // staging exchanges below enforce this.
 
-    Await.result(fixF, Duration.Inf) // both resolves read its memo
-    val mainResolve = resolveGeneIds(dims, cfg.speciesTypeKey)
+    Await.result(fixF, Duration.Inf) // every resolve variant reads its memo
     val anyResolve = resolveGeneIds(dims, -1)
 
     // noRatGene (MAHQC.java:195-200) as a broadcast ortholog-id marker
@@ -224,7 +214,7 @@ object Audit {
     val isoEvCond = col("evidence").isin(cfg.isoCodes.toSeq: _*)
     // MATCH BY <db>: db values are bounded by the cfg.sources allow-list
     val obsMatch = new Observation("match")
-    val matched = matchGenes(qc, dims, cfg.speciesTypeKey, Some(mainResolve))
+    val matched = matchGenes(qc, dims, cfg.speciesTypeKey)
       .join(orthoIds, Seq("rgd_id"), "left")
       .observe(obsMatch,
         count(lit(1)).as("n"),
@@ -232,7 +222,6 @@ object Audit {
           cfg.sources.map(s =>
             count(when(col("db") === s, 1)).as(s"by_$s")): _*)
       .drop("_ortho") // not persisted: single spine consumer (round 7)
-    val matchedObs = matched
 
     // scalar-QC counters in reference evaluation order (F7 -> P6 -> F8 ->
     // P7/P5/P8, MAHQC.java:250-316): each condition only counts rows
@@ -250,7 +239,7 @@ object Audit {
     // replaces the former buildAnnotations re-run + anti-join side scan
     // (the marker is dropped before qcAndEnrich, which re-joins terms
     // inner for the actual F9 drop — row set unchanged)
-    val built = buildAnnotations(matchedObs, dims, cfg)
+    val built = buildAnnotations(matched, dims, cfg)
       .join(broadcast(dims.ontTerms.select(col("term_acc"))
         .withColumn("_known", lit(1))), Seq("term_acc"), "left")
       .observe(obsBuilt,
@@ -293,10 +282,9 @@ object Audit {
     // line depends only on (db, db_object_id, gene_product_form_id),
     // so BOTH counters reduce to cascades over one shared
     // dimension-sized per-triple count frame:
-    //  - inactive (identity-resolve match hitting a non-ACTIVE gene):
-    //    sum of _n over matched triples semi-joined to the inactive
-    //    dim — exactly inactive(qc, ..).count(), since matchGenes'
-    //    per-triple fan-out is what each of the triple's lines fans to;
+    //  - inactive: sum of _n over inactive(triples) — exactly
+    //    inactive(qc, ..).count(), since matchGenes' per-triple fan-out
+    //    is what each of the triple's lines fans to;
     //  - unmatched (MAHQC.java:81-84 — lines with no ACTIVE gene of
     //    ANY species after redirect; a line counts as matched when ANY
     //    gpfi variant of its (db, id) matched): anti-join over the
@@ -314,13 +302,7 @@ object Audit {
         .groupBy(col("db"), col("db_object_id"), col("gene_product_form_id"))
         .agg(count(lit(1)).as("_n"))))
       val inactiveF = triplesF.map { t =>
-        val notActive = dims.rgdIds
-          .filter(col("object_key") === Constants.GENES_OBJECT_KEY &&
-            col("object_status") =!= "ACTIVE")
-          .select(col("rgd_id"))
-        matchGenes(t.df, dims, cfg.speciesTypeKey,
-            Some(identityResolve(dims)))
-          .join(broadcast(notActive), Seq("rgd_id"), "left_semi")
+        inactive(t.df, dims, cfg.speciesTypeKey)
           .agg(coalesce(sum(col("_n")), lit(0L)).cast("long"))
           .head().getLong(0)
       }

@@ -146,26 +146,24 @@ object MergeSink {
   // brake's initial, current and stale counts and the delete itself all
   // read them, so the brake always compares like scopes.
 
-  /** `table` with a `marker` column that is non-null exactly on rows
+  /** `table` with a boolean `marker` column that is true exactly on rows
     * whose annotated object is an ACTIVE object of `speciesTypeKey` (the
     * jar's `r.object_status='ACTIVE' AND r.species_type_key=?`). The
-    * scope is distinct, so the left join never multiplies rows, and
-    * dim-sized, so it is broadcast.
+    * scope is dim-sized, so it is broadcast.
     */
   private[graft] def scoped(table: DataFrame, rgdIds: DataFrame,
                             speciesTypeKey: Int, marker: String): DataFrame =
-    table.join(
+    table.withColumn(marker, col("annotated_object_rgd_id").isin(
       broadcast(rgdIds
         .filter(col("species_type_key") === speciesTypeKey &&
           col("object_status") === "ACTIVE")
-        .select(col("rgd_id").as(marker)).distinct()),
-      col("annotated_object_rgd_id") === col(marker), "left")
+        .select(col("rgd_id")))))
 
   /** In-scope rows of reference `refRgdId` on a [[scoped]] frame: the
     * brake's initial (A8) and current counts.
     */
   private[graft] def current(marker: String, refRgdId: Int): Column =
-    col("ref_rgd_id") === refRgdId && col(marker).isNotNull
+    col("ref_rgd_id") === refRgdId && col(marker)
 
   /** [[current]] rows this pipeline wrote and the run left untouched:
     * U4's delete candidates.

@@ -73,6 +73,24 @@ class PipelineSpec extends SparkSpec {
       Timestamp.valueOf("2024-04-09 00:00:00"))
   }
 
+  test("P9: an unparseable GAF date leaves the date null and keeps the row") {
+    import spark.implicits._
+    val annots = Seq("", "2024-04-09", "20240409").zipWithIndex.map {
+      case (date, i) => ("GO:0001", 1001, 1, "MGI", Constants.REF_MGI, "IDA",
+        "", "F", null.asInstanceOf[String], s"PMID:$i",
+        null.asInstanceOf[String], null.asInstanceOf[String],
+        null.asInstanceOf[String], date, 1001)
+    }.toDF("term_acc", "annotated_object_rgd_id", "rgd_object_key",
+        "data_src", "ref_rgd_id", "evidence", "with_info", "aspect",
+        "qualifier", "xref_source", "notes", "annotation_extension",
+        "gene_product_form_id", "gaf_date", "_src_gene")
+    val dates = AnnotationPipeline.qcAndEnrich(annots, dims, cfg)
+      .select($"xref_source", $"original_created_date")
+      .as[(String, Timestamp)].collect().toMap
+    assert(dates === Map("PMID:0" -> null, "PMID:1" -> null,
+      "PMID:2" -> Timestamp.valueOf("2024-04-09 00:00:00")))
+  }
+
   test("P6: empty with_info + gpfi yields bare gpfi, no leading comma") {
     import spark.implicits._
     val annots = Seq(

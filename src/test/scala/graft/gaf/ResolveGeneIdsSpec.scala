@@ -2,6 +2,8 @@ package graft.gaf
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.util.Pretty
 import graft.SparkSpec
 import graft.gaf.Constants._
 
@@ -72,13 +74,10 @@ class ResolveGeneIdsSpec extends SparkSpec {
     assert(m === Map(40 -> 41, 41 -> 41))
   }
 
-  test("non-numeric redirect target falls back to the probing loop") {
+  test("non-numeric ids resolve through the walk in their own type") {
     // exotic id scheme: the SOURCE id is a numeric string but the
-    // redirect TARGET is not. try_cast silently nulls the target, so a
-    // source-column-only guard would keep the driver fast path, drop the
-    // redirect from the driver map, underestimate the chain depth, and
-    // truncate the chain WITHOUT the convergence error. The pre-cast
-    // non-null flag must force the probing loop, which handles any type.
+    // redirect TARGET is not. The walk keys its maps on the ids as
+    // collected, so neither id may be cast to a number on the way.
     import org.apache.spark.sql.types._
     val strIds = StructType(Seq(
       StructField("rgd_id", StringType),
@@ -99,5 +98,70 @@ class ResolveGeneIdsSpec extends SparkSpec {
     val m = AnnotationPipeline.resolveGeneIds(d, MOUSE).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(m === Map("1" -> "ABC", "ABC" -> "ABC"))
+  }
+
+  /** One random J6 input: gene status rows, history edges and a hop
+    * limit.
+    */
+  private final case class Graph(status: Seq[(Int, Int, String, Int)],
+                                 history: Seq[(Int, Integer)], maxHops: Int)
+
+  private val genGraph: Gen[Graph] = {
+    val id = Gen.choose(1, 40)
+    val statusRow = for {
+      key <- Gen.frequency(9 -> GENES_OBJECT_KEY, 1 -> 3)
+      st <- Gen.frequency(4 -> "ACTIVE", 4 -> "RETIRED", 1 -> "WITHDRAWN",
+        1 -> (null: String))
+      sp <- Gen.oneOf(MOUSE, RAT, HUMAN)
+    } yield (key, st, sp)
+    for {
+      // an id listed twice has two status rows, each its own walk
+      nIds <- Gen.choose(0, 40)
+      ids <- Gen.listOfN(nIds, id)
+      rows <- Gen.listOfN(nIds, statusRow)
+      // targets outside rgd_ids, sources only in history, several
+      // redirects from one id, the odd NULL target and cycles all arise
+      // from drawing both ends out of the same 40 ids
+      nEdges <- Gen.choose(0, 40)
+      edges <- Gen.listOfN(nEdges, Gen.zip(id,
+        Gen.frequency(9 -> id.map(Int.box), 1 -> Gen.const(null: Integer))))
+      maxHops <- Gen.choose(1, 8)
+    } yield Graph(ids.zip(rows).map { case (i, (k, st, sp)) =>
+      (i, k, st, sp) }, edges, maxHops)
+  }
+
+  private def graphDims(g: Graph): Dimensions = {
+    val empty = Fixtures.emptyFullAnnot(spark)
+    Dimensions(
+      rgdIds = df(Dims.rgdIds, g.status.map { case (i, k, st, sp) =>
+        Row(i, k, st, sp) }: _*),
+      genes = empty, xdb = empty,
+      history = df(Dims.rgdIdHistory, g.history.map { case (o, n) =>
+        Row(o, n) }: _*),
+      ontTerms = empty, ontSynonyms = empty, ontDag = empty, orthologs = empty)
+  }
+
+  /** The fixpoint's rows in a canonical order, or None when it throws
+    * the non-convergence error.
+    */
+  private def rowsOf(fixpoint: => DataFrame): Option[Seq[String]] =
+    try {
+      val f = fixpoint
+      val cols = Seq("raw_rgd_id", "raw_status", "cur_id", "cur_status",
+        "cur_species")
+      Some(f.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted)
+    } catch { case _: IllegalStateException => None }
+
+  test("the driver walk and the probing loop agree on random history graphs") {
+    val prop = Prop.forAll(genGraph) { g =>
+      val d = graphDims(g)
+      val walked = rowsOf(AnnotationPipeline.walkFixpoint(d, g.maxHops).get)
+      val probed = rowsOf(AnnotationPipeline.probeFixpoint(d, g.maxHops))
+      Prop(walked == probed) :| s"walk $walked != probe $probed"
+    }
+    val params = Test.Parameters.default
+      .withMinSuccessfulTests(25).withInitialSeed(20261019L)
+    val res = Test.check(params, prop)
+    assert(res.passed, Pretty.pretty(res))
   }
 }

@@ -22,8 +22,8 @@ class StaleDeleteSpec extends SparkSpec {
   private val old = Timestamp.valueOf("2025-06-01 00:00:00")
   private val fresh = Timestamp.valueOf("2026-01-02 00:00:00")
 
-  /** Objects: 1 and 2 ACTIVE mouse (1 listed twice, so the scope must be
-    * distinct), 3 RETIRED mouse, 4 ACTIVE rat.
+  /** Objects: 1 and 2 ACTIVE mouse (1 listed twice, so the scope must
+    * not multiply rows), 3 RETIRED mouse, 4 ACTIVE rat.
     */
   private lazy val rgdIds: DataFrame = spark.createDataFrame(
     java.util.List.of(
