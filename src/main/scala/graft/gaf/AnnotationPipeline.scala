@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.gaf.Constants._
 import graft.operators.{AnnotMerge, Consolidator, MergeSink}
 import graft.plans.DagClosure
@@ -65,16 +66,19 @@ object AnnotationPipeline {
     * (MAHQC.java:61-67); F5: drop IPI × (GO:0003824 ∪ descendants)
     * (MAHQC.java:69-75).
     */
-  def qcTermFilters(gaf: DataFrame, dims: Dimensions): DataFrame = {
-    val not4curation = not4CurationTerms(dims)
-    val catalytic = catalyticTerms(dims)
+  def qcTermFilters(gaf: DataFrame, dims: Dimensions): DataFrame =
+    dropCatalyticIpi(dropNot4Curation(gaf, dims), dims)
 
-    gaf
-      .join(broadcast(not4curation), Seq("go_id"), "left_anti")
-      .join(broadcast(catalytic.withColumn("_ipi", lit(1))), Seq("go_id"), "left")
+  /** F4 alone. */
+  private[graft] def dropNot4Curation(gaf: DataFrame, dims: Dimensions): DataFrame =
+    gaf.join(broadcast(not4CurationTerms(dims)), Seq("go_id"), "left_anti")
+
+  /** F5 alone. */
+  private[graft] def dropCatalyticIpi(gaf: DataFrame, dims: Dimensions): DataFrame =
+    gaf.join(broadcast(catalyticTerms(dims).withColumn("_ipi", lit(1))),
+        Seq("go_id"), "left")
       .filter(!(col("evidence") === "IPI" && col("_ipi").isNotNull))
       .drop("_ipi")
-  }
 
   /** F4's term set: every term carrying a Not4Curation synonym (go_id). */
   private[graft] def not4CurationTerms(dims: Dimensions): DataFrame =
@@ -86,7 +90,7 @@ object AnnotationPipeline {
   private[graft] def catalyticTerms(dims: Dimensions): DataFrame =
     DagClosure
       .descendantsOf(dims.ontDag, "parent_term_acc", "child_term_acc",
-        lit(CATALYTIC_ACTIVITY))
+        CATALYTIC_ACTIVITY)
       .select(col("descendant").as("go_id"))
       .union(dims.ontDag.sparkSession.createDataFrame(
         java.util.List.of(Row(CATALYTIC_ACTIVITY)),
@@ -135,7 +139,7 @@ object AnnotationPipeline {
   private val fixpointColumns =
     Seq("raw_rgd_id", "raw_status", "cur_id", "cur_status", "cur_species")
 
-  /** Above this many gene status plus redirect rows, [[walkFixpoint]]
+  /** Above this many gene status plus history rows, [[walkFixpoint]]
     * leaves the fixpoint to [[probeFixpoint]] on the executors.
     */
   private val walkCap = 2000000
@@ -144,6 +148,7 @@ object AnnotationPipeline {
     dims.rgdIds.filter(col("object_key") === GENES_OBJECT_KEY)
       .select(col("rgd_id"), col("object_status"), col("species_type_key"))
 
+  /** Each old id's `max(new_rgd_id)`: [[probeFixpoint]]'s redirect map. */
   private def redirects(dims: Dimensions): DataFrame =
     dims.history.groupBy(col("old_rgd_id"))
       .agg(max(col("new_rgd_id")).as("redir_rgd_id"))
@@ -154,24 +159,32 @@ object AnnotationPipeline {
 
   /** The fixpoint as a local relation, the same collect-then-walk shape
     * as [[graft.plans.DagClosure]]: ONE capped collect of the gene status
-    * rows and the redirect map (one union, each id column in its own
-    * type), a walk per domain id on the driver, and a job-free local
-    * relation every consumer broadcasts. None when the inputs exceed
-    * [[walkCap]].
+    * rows and the raw history rows (one union, each id column in its own
+    * type, no shuffle), a walk per domain id on the driver, and a
+    * job-free local relation every consumer broadcasts. None when the
+    * inputs exceed [[walkCap]].
     */
   private[gaf] def walkFixpoint(dims: Dimensions,
                                 maxHops: Int): Option[DataFrame] = {
     // columns: rgd_id, object_status, species_type_key on status rows;
-    // old_rgd_id, redir_rgd_id on redirect rows; null on the other side
-    val both = geneStatus(dims)
-      .unionByName(redirects(dims), allowMissingColumns = true)
+    // old_rgd_id, new_rgd_id on history rows; null on the other side
+    val both = geneStatus(dims).unionByName(
+      dims.history.select(col("old_rgd_id"), col("new_rgd_id")),
+      allowMissingColumns = true)
     val rows = graft.Tables.limitCollect(both, walkCap + 1)
     Option.when(rows.length <= walkCap) {
       // null ids match nothing, as in a join: they key neither map
       val statusOf = rows.filter(!_.isNullAt(0))
         .groupMap(_.get(0))(r => (r.getString(1), r.get(2)))
+      // an id's redirect is its max target, as max() orders it: strings
+      // by their UTF-8 bytes, other ids naturally; null targets skipped
+      def ordered(v: Any): Comparable[Any] = (v match {
+        case s: String => UTF8String.fromString(s)
+        case o => o
+      }).asInstanceOf[Comparable[Any]]
       val redirect = rows.filter(r => !r.isNullAt(3) && !r.isNullAt(4))
-        .map(r => r.get(3) -> r.get(4)).toMap
+        .groupMapReduce(_.get(3))(_.get(4))((a, b) =>
+          if (ordered(a).compareTo(ordered(b)) >= 0) a else b)
       def states(k: Any): Seq[(String, Any)] =
         statusOf.get(k).fold(Seq[(String, Any)]((null, null)))(_.toSeq)
       def walk(k: Any, st: String, sp: Any, hops: Int): Seq[(Any, String, Any)] =
@@ -181,7 +194,7 @@ object AnnotationPipeline {
             states(next).flatMap { case (s, p) => walk(next, s, p, hops + 1) }
           case _ => Seq((k, st, sp))
         }
-      // a status row carries its id in rgd_id, a redirect row in old_rgd_id
+      // a status row carries its id in rgd_id, a history row in old_rgd_id
       val domain = rows.map(r => if (r.isNullAt(0)) r.get(3) else r.get(0))
         .distinct
       val out = for {
@@ -290,9 +303,9 @@ object AnnotationPipeline {
     // coalesce + explode. Fully map-side: the one-to-many fan-out AND
     // the best-tier choice happen without shuffling the fact. An RGD
     // line's tier keys are all -1, so its tier probes find nothing.
-    // `resolveOverride` swaps the (raw -> active file-species) dim for an
-    // audit variant (raw not-ACTIVE ids: Audit.inactive; any-species:
-    // unmatched-line parity with MAHQC.java:81-84) — the plan shape is
+    // `resolveOverride` swaps the (raw -> active file-species) dim for
+    // Audit.candidates' identity map (every raw id to itself, so the
+    // audit legs see the raw candidate list) — the plan shape is
     // identical.
     val resolve = resolveOverride.getOrElse(resolveGeneIds(dims, fileSpecies))
     // Broadcast size guard (mirrors Similarity.maxCentroids): the set dim

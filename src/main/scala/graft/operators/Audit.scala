@@ -49,12 +49,13 @@ object Audit {
 
   /** unmatched.log — source lines that matched no ACTIVE gene of any
     * species (MAHQC.java:81-84 tests species after the unmatched test),
-    * the same test as the A7 `unmatchedCounter`.
+    * the same test as the A7 `unmatchedCounter`: no [[candidates]] row of
+    * the line's (db, db_object_id) is an [[activeHit]].
     */
   def unmatched(gaf: DataFrame, dims: Dimensions, fileSpecies: Int): DataFrame = {
     val filtered = AnnotationPipeline.qcTermFilters(gaf, dims)
-    val matched = AnnotationPipeline.matchGenes(filtered, dims, fileSpecies,
-        Some(AnnotationPipeline.resolveGeneIds(dims, -1)))
+    val matched = candidates(filtered, dims, fileSpecies)
+      .filter(activeHit(dims))
       .select(col("db"), col("db_object_id")).distinct()
     filtered.join(matched, Seq("db", "db_object_id"), "left_anti")
   }
@@ -71,18 +72,41 @@ object Audit {
 
   /** inactive.log — (line, gene) pairs whose RAW candidate gene is not
     * ACTIVE (MAHQC.java:169-190 increments per non-active gene in the
-    * candidate list, before the species check). Multi-hop redirect
-    * targets still count their retired sources, like the reference.
-    * Matches with a resolve variant read off the J6 walk: the raw gene
-    * ids whose own status is not ACTIVE, each mapped to itself. Tier
-    * priority is still chosen on raw match presence, so a tier whose
-    * genes are all ACTIVE wins and yields no pair.
+    * candidate list, before the species check): the [[candidates]] rows
+    * that are an [[inactiveHit]]. Multi-hop redirect targets still count
+    * their retired sources, like the reference. A tier whose genes are
+    * all ACTIVE wins and yields no pair.
     */
   def inactive(gaf: DataFrame, dims: Dimensions, fileSpecies: Int): DataFrame =
+    candidates(gaf, dims, fileSpecies).filter(inactiveHit(dims))
+
+  /** The reference's candidate list (MAHQC.java:101-167): one row per
+    * (line, RAW candidate gene) of the line's chosen tier, in
+    * [[AnnotationPipeline.matchGenes]]' shape with `rgd_id` the raw id.
+    * It is `matchGenes` with every id of the J6 fixpoint's domain
+    * resolving to itself. `matchGenes` picks a line's tier on raw group
+    * existence, whatever the resolve frame, so both audit legs read
+    * their rows off this one match.
+    */
+  def candidates(gaf: DataFrame, dims: Dimensions, fileSpecies: Int): DataFrame =
     AnnotationPipeline.matchGenes(gaf, dims, fileSpecies, Some(
       AnnotationPipeline.resolveFixpoint(dims)
-        .filter(col("raw_status") =!= "ACTIVE")
-        .select(col("raw_rgd_id"), col("raw_rgd_id").as("final_rgd_id"))))
+        .select(col("raw_rgd_id"), col("raw_rgd_id").as("final_rgd_id"))
+        .distinct()))
+
+  /** On [[candidates]] rows: the gene has a gene status row that is not
+    * ACTIVE (a null status does not count).
+    */
+  private def inactiveHit(dims: Dimensions): Column =
+    col("rgd_id").isin(broadcast(AnnotationPipeline.resolveFixpoint(dims)
+      .filter(col("raw_status") =!= "ACTIVE").select(col("raw_rgd_id"))))
+
+  /** On [[candidates]] rows: the gene's walk reaches an ACTIVE gene of
+    * any species.
+    */
+  private def activeHit(dims: Dimensions): Column =
+    col("rgd_id").isin(broadcast(AnnotationPipeline.resolveGeneIds(dims, -1)
+      .select(col("raw_rgd_id"))))
 
   /** noRatGene.log — (line, matched gene) pairs that are ISO-eligible but
     * have no rat ortholog (MAHQC.java:195-200).
@@ -130,16 +154,12 @@ object Audit {
 
     // ---- main pass: one end-to-end plan with observe() hooks at every
     // stage boundary — these counters cost ZERO extra scans (they
-    // aggregate map-side with the single action at the bottom). The
-    // join-shaped QC counters (F4/F5/F9) ride the same pass as marker
-    // left-joins + conditional counts, replacing three side scans; so do
-    // unmatched (any-species tier cascade over the DISTINCT match-key
-    // set, rejoined as a marker — round-7) and noRatGene (broadcast
-    // ortholog-id marker). The frames the remaining side passes
-    // genuinely re-read (qc, matched, enriched, merged) are persisted
-    // and FILLED BY the one main action, so each side pass starts from a
-    // cache, never from the parquet scan (round-2 shape: ~59s at sf0.1;
-    // round-6: ~14.6s; this shape cuts the side-job count 6 -> 2).
+    // aggregate map-side with the single action at the bottom). F4/F5
+    // are row counts observed around the qcTermFilters steps; F9 and
+    // noRatGene ride the same pass as broadcast marker left-joins +
+    // conditional counts, replacing side scans. The enriched frame the
+    // linesRemoved pass re-reads is snapshotted by the one spine fill
+    // (see the fill-discipline note below).
     val src = filterSources(gaf, cfg.sources)
 
     import scala.concurrent.{Await, ExecutionContext, Future}
@@ -158,53 +178,39 @@ object Audit {
       ExecutionContext.fromExecutorService(pool)
     // r10: the dump holds NO columnar caches (the former qc cache and
     // its session-wide compression-conf flip are gone); its transient
-    // storage is the enriched snapshot (released in the finally below)
-    // and the side future's dimension-sized triples snapshot (released
-    // inside the future itself).
+    // storage is the enriched snapshot (released in the finally below).
     val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
     try {
 
-    // F4/F5 as observed markers — identical row set to qcTermFilters()
-    val not4curation = AnnotationPipeline.not4CurationTerms(dims)
-    // the closure BFS and the redirect-fixpoint walk are independent
-    // bounded driver precomputes (each a couple of driver-side collect
-    // rounds) — run them concurrently (round 8; they were ~3.3s
+    // the descendants BFS and the redirect-fixpoint walk are independent
+    // bounded driver precomputes (each one driver-side collect, both
+    // memoized) — run them concurrently (round 8; they were ~3.3s
     // sequential at sf0.1, ~1.8s overlapped)
     val catalyticF = Future(AnnotationPipeline.catalyticTerms(dims))
     // ONE memoized redirect-fixpoint walk feeds every resolve variant
-    // (main species-scoped, the unmatched counter's any-species and the
-    // inactive counter's raw not-ACTIVE ids)
+    // (the main species-scoped one and the audit candidates' identity)
     val fixF = Future(resolveFixpoint(dims))
-    val catalytic = Await.result(catalyticF, Duration.Inf)
-    val f4Hit = col("_n4c").isNotNull
-    val f5Hit = !f4Hit && col("evidence") === "IPI" && col("_ipi").isNotNull
+    Await.result(catalyticF, Duration.Inf) // F5 reads its memo
 
-    val obsQc = new Observation("qc")
-    val qc = src
-      .join(broadcast(not4curation.withColumn("_n4c", lit(1))),
-        Seq("go_id"), "left")
-      .join(broadcast(catalytic.withColumn("_ipi", lit(1))),
-        Seq("go_id"), "left")
-      .observe(obsQc,
-        count(when(f4Hit, 1)).as("f4"),
-        count(when(f5Hit, 1)).as("f5"))
-      .filter(!f4Hit && !f5Hit)
-      .drop("_n4c", "_ipi")
-    // qc is deliberately NOT cached (r10): each of the three concurrent
-    // actions recomputes this cheap scan+broadcast-marker plan; a
-    // columnar cache here forced a fill barrier onto the critical path
-    // (fill + write + read back cost more than the recomputes, and the
-    // compression-conf flip it needed was a session-wide contract).
-    // obsQc's CollectMetrics executes once per ACTION — each execution
-    // computes the identical deterministic counts and Observation keeps
-    // the first delivery, so multiple firings are safe (r8 measured
-    // note). Within any single action the node must appear under ONE
-    // reused exchange or a linear spine — never under a self-union of
-    // the chain — or that action's accumulator would double-count; the
-    // staging exchanges below enforce this.
+    // F4/F5: the row counts before F4, after F4 and after F5
+    def rowsSeen(df: DataFrame, obs: Observation): DataFrame =
+      df.observe(obs, count(lit(1)).as("n"))
+    val obsIn = new Observation("qc_in")
+    val obsF4 = new Observation("qc_f4")
+    val obsF5 = new Observation("qc_f5")
+    val qc = rowsSeen(dropCatalyticIpi(
+      rowsSeen(dropNot4Curation(rowsSeen(src, obsIn), dims), obsF4), dims), obsF5)
+    // qc is deliberately NOT cached (r10): the side pass recomputes this
+    // cheap scan+broadcast plan; a columnar cache here forced a fill
+    // barrier onto the critical path (fill + write + read back cost more
+    // than the recomputes, and the compression-conf flip it needed was a
+    // session-wide contract). The side pass reads qc WITHOUT the
+    // Observations: an Observation keeps its first delivery, and a side
+    // job whose shuffle stage ran empty delivers no metrics at all (AQE
+    // prunes the collecting nodes from its final plan), which would
+    // read every F4/F5 drop as 0.
 
     Await.result(fixF, Duration.Inf) // every resolve variant reads its memo
-    val anyResolve = resolveGeneIds(dims, -1)
 
     // noRatGene (MAHQC.java:195-200) as a broadcast ortholog-id marker
     // on the matched spine — replaces the former anti-join side job
@@ -273,61 +279,47 @@ object Audit {
     // starve each other, re-confirming the r8 "23.1s" finding). This
     // form keeps work-minimal's one chain compute but removes the qc
     // barrier: the materialize pays scan+chain+write in one pass, and
-    // obsQc/obsMatch/obsBuilt fire exactly once inside it (Snapshot
-    // runs under a SQL execution id so Observations deliver). The side
-    // future re-fires obsQc from its own qc recompute — identical
-    // deterministic values, first delivery wins (r8 measured note).
+    // the qc Observations, obsMatch and obsBuilt fire exactly once inside
+    // it (Snapshot runs under a SQL execution id so Observations
+    // deliver).
 
-    // ---- inactive/unmatched side counters. Match-ness per
-    // line depends only on (db, db_object_id, gene_product_form_id),
-    // so BOTH counters reduce to cascades over one shared
-    // dimension-sized per-triple count frame:
-    //  - inactive: sum of _n over inactive(triples) — exactly
-    //    inactive(qc, ..).count(), since matchGenes' per-triple fan-out
-    //    is what each of the triple's lines fans to;
-    //  - unmatched (MAHQC.java:81-84 — lines with no ACTIVE gene of
-    //    ANY species after redirect; a line counts as matched when ANY
-    //    gpfi variant of its (db, id) matched): anti-join over the
-    //    (db, id) groups — no anti-join against fact rows, no spine
-    //    marker join (a spine marker was measured costing ~2s of
-    //    broadcast build inside the fill).
-    // r10: the triples materialize first (one shared fill, no unfilled-
-    // snapshot race), then the two cascades run CONCURRENTLY — they were
-    // sequential inside one future and their sum (8.5s warm at sf0.1)
-    // was the dump's critical path; each is dimension-sized so the cost
-    // is mostly the tier-cascade's fixed plan+broadcast work, which two
-    // driver threads pay independently.
-    val sideF = {
-      val triplesF = Future(Snapshot.materialize(qc
-        .groupBy(col("db"), col("db_object_id"), col("gene_product_form_id"))
-        .agg(count(lit(1)).as("_n"))))
-      val inactiveF = triplesF.map { t =>
-        inactive(t.df, dims, cfg.speciesTypeKey)
-          .agg(coalesce(sum(col("_n")), lit(0L)).cast("long"))
-          .head().getLong(0)
-      }
-      val unmatchedF = triplesF.map { t =>
-        val matchedKeys = matchGenes(t.df, dims, cfg.speciesTypeKey,
-            Some(anyResolve))
-          .select(col("db"), col("db_object_id"))
-          .dropDuplicates("db", "db_object_id")
-        t.df
-          .groupBy(col("db"), col("db_object_id"))
-          .agg(sum(col("_n")).as("_n"))
-          .join(matchedKeys, Seq("db", "db_object_id"), "left_anti")
-          .agg(coalesce(sum(col("_n")), lit(0L)).cast("long"))
-          .head().getLong(0)
-      }
-      val both = for { i <- inactiveF; u <- unmatchedF } yield (i, u)
-      // release the triples storage once BOTH cascades finish (success
-      // or failure — andThen fires on any completion)
-      both.andThen { case _ => triplesF.foreach(_.release()) }
-      both
+    // ---- inactive/unmatched side counters. Match-ness per line depends
+    // only on (db, db_object_id, gene_product_form_id), so BOTH counters
+    // read ONE candidate match over the dimension-sized per-triple count
+    // frame, in one job:
+    //  - inactive: Σ _n × the triple's inactive hits — exactly
+    //    inactive(qc, ..).count(), since each of the triple's lines has
+    //    the triple's candidates;
+    //  - unmatched (MAHQC.java:81-84 — lines with no ACTIVE gene of ANY
+    //    species after redirect; a line counts as matched when ANY gpfi
+    //    variant of its (db, id) has an active hit): Σ _n over the
+    //    (db, id) groups with no active hit.
+    val sideF = Future {
+      val triple = Seq("db", "db_object_id", "gene_product_form_id")
+      val triples = qcTermFilters(src, dims)
+        .groupBy(triple.map(col): _*).agg(count(lit(1)).as("_n"))
+      // a candidate row carries its triple's _n
+      val hits = candidates(triples, dims, cfg.speciesTypeKey)
+        .select(triple.map(c => col(c).as(s"_h$c")) ++ Seq(
+          when(inactiveHit(dims), col("_n")).as("_i"),
+          activeHit(dims).as("_a")): _*)
+        .groupBy(triple.map(c => col(s"_h$c")): _*)
+        .agg(sum(col("_i")).as("_i"), max(col("_a")).as("_a"))
+      val side = triples
+        .join(hits, triple.map(c => col(c) <=> col(s"_h$c")).reduce(_ && _),
+          "left")
+        .groupBy(col("db"), col("db_object_id"))
+        .agg(sum(col("_i")).as("_i"), sum(col("_n")).as("_n"),
+          max(coalesce(col("_a"), lit(false))).as("_a"))
+        .agg(coalesce(sum(col("_i")), lit(0L)).cast("long"),
+          coalesce(sum(when(!col("_a"), col("_n"))), lit(0L)).cast("long"))
+        .head()
+      (side.getLong(0), side.getLong(1))
     }
 
     // ONE spine compute (qc -> match -> build -> enrich), lineage-
     // truncated — see the fill-discipline note. Launched AFTER the side
-    // future so the dimension-sized cascades overlap this fill.
+    // future so the dimension-sized side job overlaps this fill.
     val enrichedSnap = Snapshot.materialize(enrichedPlan)
     releases += enrichedSnap.release
     val enriched = enrichedSnap.df
@@ -449,7 +441,9 @@ object Audit {
     val opsC = cnt(obsOps.get) _
     val m = cnt(obsMatch.get) _
     val b = cnt(obsBuilt.get) _
-    val q = cnt(obsQc.get) _
+    val qcIn = cnt(obsIn.get)("n")
+    val qcF4 = cnt(obsF4.get)("n")
+    val qcF5 = cnt(obsF5.get)("n")
     val consolidatedN = cnt(obsCons.get)("n")
     val mergesN = enrichedN - consolidatedN
     val matchBy = cfg.sources
@@ -460,8 +454,8 @@ object Audit {
     val noRatN = m("noRat")
 
     val rows: Seq[(String, Long)] = Seq(
-      "highLevelGoTerm" -> q("f4"),
-      "IPIAnnotToCatalyticActivityTerm" -> q("f5"),
+      "highLevelGoTerm" -> (qcIn - qcF4),
+      "IPIAnnotToCatalyticActivityTerm" -> (qcF4 - qcF5),
       "unmatchedCounter" -> unmatchedN,
       "inactiveCounter" -> inactiveN,
       "noRatGeneCounter" -> noRatN,

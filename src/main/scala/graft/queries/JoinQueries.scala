@@ -113,7 +113,7 @@ object JoinQueries extends QueryPack {
       val edges = Tables.part(s, d)
         .select($"p_partkey".as("child"), expr("p_partkey div 2").as("parent"))
         .filter($"parent" >= 1)
-      graft.plans.DagClosure.descendantsOf(edges, "parent", "child", lit(3L))
+      graft.plans.DagClosure.descendantsOf(edges, "parent", "child", 3L)
     }),
 
     // J11: null-safe upsert-match join (MAHDL.java:137, DAO.java:154-157)

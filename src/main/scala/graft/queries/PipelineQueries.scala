@@ -96,7 +96,7 @@ object PipelineQueries extends QueryPack {
         .select($"p_partkey".as("child"), expr("p_partkey div 2").as("parent"))
         .filter($"parent" >= 1)
       val banned = graft.plans.DagClosure
-        .descendantsOf(edges, "parent", "child", lit(3L))
+        .descendantsOf(edges, "parent", "child", 3L)
         .union(s.range(3, 4).select($"id".as("descendant")))
       Tables.lineitem(s, d)
         .join(broadcast(banned.withColumn("_b", lit(1))),

@@ -249,6 +249,24 @@ class OpsSpec extends SparkSpec {
     assert(counters.nonEmpty && counters.values.forall(_ === 0L), counters)
   }
 
+  test("A7 counters: a GAF whose every line is Not4Curation counts each line at F4 only") {
+    // GO:9999 carries the Not4Curation synonym; the IPI line is dropped by
+    // F4 before F5 sees it
+    def line(ev: String) = Seq("MGI", "MGI:87853", "Acaca", "", "GO:9999",
+      "PMID:1", ev, "", "F", "name", "", "gene", "taxon:10090", "20240409",
+      "MGI", "", "").mkString("\t")
+    val all4 = graft.sources.GafReader.fromLines(
+      Seq(line("IDA"), line("IPI"), line("IEA")).toDF("value"))
+    val cfg = graft.gaf.Fixtures.mouseConfig(
+      java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
+    val counters = Audit.pipelineCounters(all4, dims, cfg,
+        graft.gaf.Fixtures.emptyFullAnnot(spark))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(counters("highLevelGoTerm") === 3L)
+    assert(counters("IPIAnnotToCatalyticActivityTerm") === 0L)
+    assert((counters - "highLevelGoTerm").values.forall(_ === 0L), counters)
+  }
+
   test("new audit side outputs: inactive, noRatGene, op row lists") {
     val cfg = graft.gaf.Fixtures.mouseConfig(
       java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))

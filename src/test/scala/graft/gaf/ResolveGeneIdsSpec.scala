@@ -1,11 +1,13 @@
 package graft.gaf
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.util.Pretty
 import graft.SparkSpec
 import graft.gaf.Constants._
+import graft.gaf.ResolveGeneIdsSpec.{genGraph, graphDims}
 
 /** J6 multi-hop resolution unit tests (the jar's getActiveRgdIdFromHistory
   * is a recursive CONNECT BY — SURVEY.md §2.4 J6). Covers the chain shapes
@@ -100,13 +102,41 @@ class ResolveGeneIdsSpec extends SparkSpec {
     assert(m === Map("1" -> "ABC", "ABC" -> "ABC"))
   }
 
+  /** The fixpoint's rows in a canonical order, or None when it throws
+    * the non-convergence error.
+    */
+  private def rowsOf(fixpoint: => DataFrame): Option[Seq[String]] =
+    try {
+      val f = fixpoint
+      val cols = Seq("raw_rgd_id", "raw_status", "cur_id", "cur_status",
+        "cur_species")
+      Some(f.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted)
+    } catch { case _: IllegalStateException => None }
+
+  test("the driver walk and the probing loop agree on random history graphs") {
+    val prop = Prop.forAll(genGraph) { g =>
+      val d = graphDims(spark, g)
+      val walked = rowsOf(AnnotationPipeline.walkFixpoint(d, g.maxHops).get)
+      val probed = rowsOf(AnnotationPipeline.probeFixpoint(d, g.maxHops))
+      Prop(walked == probed) :| s"walk $walked != probe $probed"
+    }
+    val params = Test.Parameters.default
+      .withMinSuccessfulTests(25).withInitialSeed(20261019L)
+    val res = Test.check(params, prop)
+    assert(res.passed, Pretty.pretty(res))
+  }
+}
+
+/** Random J6 inputs, shared by the fixpoint and the audit-leg properties. */
+object ResolveGeneIdsSpec {
+
   /** One random J6 input: gene status rows, history edges and a hop
     * limit.
     */
-  private final case class Graph(status: Seq[(Int, Int, String, Int)],
-                                 history: Seq[(Int, Integer)], maxHops: Int)
+  final case class Graph(status: Seq[(Int, Int, String, Int)],
+                         history: Seq[(Int, Integer)], maxHops: Int)
 
-  private val genGraph: Gen[Graph] = {
+  val genGraph: Gen[Graph] = {
     val id = Gen.choose(1, 40)
     val statusRow = for {
       key <- Gen.frequency(9 -> GENES_OBJECT_KEY, 1 -> 3)
@@ -130,38 +160,17 @@ class ResolveGeneIdsSpec extends SparkSpec {
       (i, k, st, sp) }, edges, maxHops)
   }
 
-  private def graphDims(g: Graph): Dimensions = {
-    val empty = Fixtures.emptyFullAnnot(spark)
+  /** `g`'s status and history rows as dims; every other dim is empty. */
+  def graphDims(spark: SparkSession, g: Graph): Dimensions = {
+    def df(schema: StructType, rows: Seq[Row]): DataFrame =
+      spark.createDataFrame(java.util.List.of(rows: _*), schema)
     Dimensions(
       rgdIds = df(Dims.rgdIds, g.status.map { case (i, k, st, sp) =>
-        Row(i, k, st, sp) }: _*),
-      genes = empty, xdb = empty,
+        Row(i, k, st, sp) }),
+      genes = df(Dims.genes, Nil), xdb = df(Dims.rgdAccXdb, Nil),
       history = df(Dims.rgdIdHistory, g.history.map { case (o, n) =>
-        Row(o, n) }: _*),
-      ontTerms = empty, ontSynonyms = empty, ontDag = empty, orthologs = empty)
-  }
-
-  /** The fixpoint's rows in a canonical order, or None when it throws
-    * the non-convergence error.
-    */
-  private def rowsOf(fixpoint: => DataFrame): Option[Seq[String]] =
-    try {
-      val f = fixpoint
-      val cols = Seq("raw_rgd_id", "raw_status", "cur_id", "cur_status",
-        "cur_species")
-      Some(f.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted)
-    } catch { case _: IllegalStateException => None }
-
-  test("the driver walk and the probing loop agree on random history graphs") {
-    val prop = Prop.forAll(genGraph) { g =>
-      val d = graphDims(g)
-      val walked = rowsOf(AnnotationPipeline.walkFixpoint(d, g.maxHops).get)
-      val probed = rowsOf(AnnotationPipeline.probeFixpoint(d, g.maxHops))
-      Prop(walked == probed) :| s"walk $walked != probe $probed"
-    }
-    val params = Test.Parameters.default
-      .withMinSuccessfulTests(25).withInitialSeed(20261019L)
-    val res = Test.check(params, prop)
-    assert(res.passed, Pretty.pretty(res))
+        Row(o, n) }),
+      ontTerms = df(Dims.ontTerms, Nil), ontSynonyms = df(Dims.ontSynonyms, Nil),
+      ontDag = df(Dims.ontDag, Nil), orthologs = df(Dims.orthologs, Nil))
   }
 }

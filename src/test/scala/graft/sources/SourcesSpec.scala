@@ -65,8 +65,7 @@ class SourcesSpec extends SparkSpec {
       ("GO:0006996", "GO:0048308", "part_of")))
     // transitive: GO:0006996 is an ancestor of GO:0000001
     val desc = graft.plans.DagClosure
-      .descendantsOf(edges, "parent_term_acc", "child_term_acc",
-        lit("GO:0006996"))
+      .descendantsOf(edges, "parent_term_acc", "child_term_acc", "GO:0006996")
       .collect().map(_.getString(0)).toSet
     assert(desc === Set("GO:0048308", "GO:0000001"))
   }
